@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
 
@@ -17,8 +16,8 @@ import org.apache.spark.sql.functions.udf
   *
   * The UDF is a codegen boundary (SURVEY.md §4) — queries isolate it in its
   * own projection; everything downstream operates on the
-  * `ArrayType(IntegerType)` column (F3 keeps the array form; the 1,024-wide
-  * scalar pivot exists only as an optional sink projection, `wideTokens`).
+  * `ArrayType(IntegerType)` column (F3: the curated zone keeps the `tokens`
+  * array, where the reference's scalar `token_i` column is `tokens[i]`).
   */
 object EsmTokenizer {
   val ClsId  = 0
@@ -71,10 +70,4 @@ object EsmTokenizer {
   /** Column API over the native [[graft.plans.EsmTokenizeExpr]]. */
   def tokenizeCol(c: org.apache.spark.sql.Column, maxLength: Int = DefaultMaxLength): org.apache.spark.sql.Column =
     graft.plans.EsmTokenizeExpr(c, maxLength)
-
-  /** F3 — optional wide sink projection (reference writes 1,024 `token_i`
-    * scalar columns). Engine-internal form stays the array.
-    */
-  def wideTokens(tokens: Column, maxLength: Int): Seq[Column] =
-    (0 until maxLength).map(i => tokens.getItem(i).as(s"token_$i"))
 }

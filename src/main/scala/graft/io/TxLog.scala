@@ -1096,20 +1096,20 @@ object TxLog {
     // a scan just because one caller forgot statsCols (the reference
     // lakehouse engines always record numRecords for the same reason).
     //
-    // Integral/date zone maps come straight out of the just-written
-    // parquet FOOTERS driver-side (r13: one fewer Spark job per commit —
-    // the write job's own chunk statistics ARE the min/max the agg
-    // computed; exact for INT32/INT64 physical types, and the date image
-    // is the footer's INT32 day count verbatim). Strings (writer-side
-    // truncation semantics), timestamps (INT96 default carries no
-    // stats), blooms (need the values) and partition-valued stats
-    // columns (not in the file bytes) keep the one-job read-back, as do
-    // >32-file commits where the job amortizes better than sequential
-    // driver round-trips.
+    // Integral zone maps come straight out of the just-written parquet
+    // FOOTERS driver-side (one fewer Spark job per commit — the
+    // write job's own chunk statistics ARE the min/max the agg computed;
+    // exact for INT32/INT64 physical types). Strings (writer-side
+    // truncation semantics), dates (under LEGACY datetime rebase the
+    // footer holds hybrid-calendar day counts, while pushed-down
+    // literals are proleptic — the read-back rebases), timestamps (INT96
+    // default carries no stats), blooms (need the values) and
+    // partition-valued stats columns (not in the file bytes) keep the
+    // one-job read-back, as do >32-file commits where the job amortizes
+    // better than sequential driver round-trips.
     val footerZoneMaps = intCols.nonEmpty && strCols.isEmpty &&
       bloomSpecs.isEmpty &&
-      statsCols.flatMap(byName.get).forall(dt =>
-        isIntegral(dt) || dt == org.apache.spark.sql.types.DateType) &&
+      statsCols.flatMap(byName.get).forall(isIntegral) &&
       statsCols.map(phys).toSet
         .intersect(partitionBy.map(phys).toSet).isEmpty
     val statsJobRuns = written.nonEmpty &&

@@ -24,9 +24,13 @@ import org.apache.spark.sql.functions._
   * plans otherwise grow and re-execute from the scan) — reliable
   * `checkpoint()` when the session has a checkpoint dir configured
   * (executor-loss resilience on a real cluster), `localCheckpoint`
-  * otherwise. Convergence is an EXACT structural test on the round's own
-  * edge set (the star-forest fixed-point property, see [[isStarForest]]),
-  * not a checksum and not a diff against the previous round.
+  * otherwise. Rounds run one after another as plain plan operators on
+  * the caller's thread: a reliable round's `rdd-N` checkpoint dir is
+  * deleted as soon as the next round is materialized, and only the final
+  * round's dir (it backs the returned frame) lives until JVM exit.
+  * Convergence is an EXACT structural test on the round's own edge set
+  * (the star-forest fixed-point property, see [[isStarForest]]), not a
+  * checksum and not a diff against the previous round.
   */
 object ConnectedComponents {
 
@@ -60,22 +64,23 @@ object ConnectedComponents {
     * blocks are persisted (round 0's lineage is the entire candidate
     * generation). `localCheckpoint` stores computed blocks directly and
     * needs no such guard.
-    *
-    * Each reliable round checkpoints into its OWN subdirectory of the
-    * session's checkpoint root (`setCheckpointDir` before the write), so
-    * the round's files are deletable as a unit without touching other
-    * checkpoints sharing the session.
     */
-  private def persistRound(df: DataFrame, roundDir: Option[String]): DataFrame =
-    roundDir match {
-      case Some(dir) =>
-        df.sparkSession.sparkContext.setCheckpointDir(dir)
-        df.persist()
-        // `finally` so a cancelled speculative round (see labels) never
-        // leaks the guard persist
-        try df.checkpoint() finally df.unpersist()
-      case None => df.localCheckpoint()
-    }
+  private def persistRound(df: DataFrame, reliable: Boolean): DataFrame =
+    if (reliable) {
+      df.persist()
+      try df.checkpoint() finally df.unpersist()
+    } else df.localCheckpoint()
+
+  /** The files behind a reliably checkpointed round: Spark writes each
+    * checkpointed RDD to its own `<session checkpoint dir>/rdd-N`, so the
+    * round is deletable as a unit without touching the session's
+    * checkpoint dir or other checkpoints sharing it. None for a local
+    * checkpoint (its blocks go with the RDD).
+    */
+  private def roundDir(df: DataFrame): Option[String] =
+    df.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.getCheckpointFile
+    }.flatten
 
   /** Canonical directed edges (src > dst), self-loops dropped. */
   private def canonical(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
@@ -114,10 +119,6 @@ object ConnectedComponents {
       .distinct()
   }
 
-  /** (node, cluster_id) for every node appearing in `pairs`, where
-    * cluster_id is the minimum node id of the node's connected component
-    * (the deterministic "keeper" id).
-    */
   /** A canonically-oriented (src > dst) edge set is this algorithm's fixed
     * point iff it is a STAR FOREST: every source has out-degree EXACTLY
     * one AND no source is also a target. (Out-degree alone is not enough —
@@ -138,84 +139,40 @@ object ConnectedComponents {
       .filter(col("mn") =!= col("mx") || col("outd") > 1)
       .isEmpty
 
+  /** (node, cluster_id) for every node appearing in `pairs`, where
+    * cluster_id is the minimum node id of the node's connected component
+    * (the deterministic "keeper" id).
+    *
+    * One loop on the caller's thread: materialize the canonical edges,
+    * then while they are not a star forest run one star round, materialize
+    * it and delete the previous round's checkpoint. Every job runs under
+    * the caller's job group and local properties, and no `SparkContext`
+    * state is changed, so concurrent callers need no coordination.
+    */
   def labels(pairs: DataFrame, aCol: String, bCol: String, maxRounds: Int = 50): DataFrame = {
     val sc = pairs.sparkSession.sparkContext
-    // Reliable-checkpoint bookkeeping: a fresh per-call prefix under the
-    // session's checkpoint root; round i's dir is deleted the moment round
-    // i+1 is checkpointed (its lineage no longer reaches round i).
-    val origCkDir = sc.getCheckpointDir
-    val ckBase = origCkDir.map(b =>
-      s"$b/graft-cc-${java.util.UUID.randomUUID().toString.take(8)}")
-    var prevDir: Option[String] = None
-    def nextRoundDir(round: Int): Option[String] = ckBase.map(b => s"$b/round-$round")
-    def dropPrev(newDir: Option[String]): Unit = {
-      prevDir.foreach(deleteQuietly(sc.hadoopConfiguration, _))
-      prevDir = newDir
-    }
+    val reliable = sc.getCheckpointDir.isDefined
     // The checkpoints are EAGER: the convergence probe references each
     // round's edges twice (src and dst projections), and a lazy checkpoint
     // would race both union branches into re-computing the pipeline per
     // reference (measured +30% on q40 for the initial round, whose
     // pipeline is the whole LSH candidate generation).
-    var edges = persistRound(canonical(pairs, aCol, bCol), nextRoundDir(0))
-    dropPrev(nextRoundDir(0))
-    var converged = false
+    var edges = persistRound(canonical(pairs, aCol, bCol), reliable)
+    var converged = isStarForest(edges)
     var round = 0
-    // Convergence detection OVERLAPPED with the next star round (guide
-    // §2.6): round i+1 depends only on round i's materialized edges,
-    // never on round i's convergence verdict, so the star round runs
-    // speculatively on a driver thread while isStarForest runs here. The
-    // common case (not yet converged) pays zero extra work and removes
-    // the check's sequential job barrier from every round; the CONVERGING
-    // round cancels the speculative job (bounded waste: one cancelled
-    // round per labels() call — its partial blocks are unreferenced and
-    // reaped by the context cleaner). Results are identical: the same
-    // rounds are accepted in the same order.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     while (!converged && round < maxRounds) {
-      val specRound = round + 1
-      val specDir = nextRoundDir(specRound)
-      val cancelled = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val group =
-        s"graft-cc-spec-${java.util.UUID.randomUUID().toString.take(8)}"
-      val cur = edges
-      val spec: Future[Option[DataFrame]] = Future {
-        if (cancelled.get) None
-        else {
-          // job group set INSIDE the future (thread-locals don't carry
-          // into a pooled thread), unique per speculation so the cancel
-          // can never touch another thread's jobs (q603 runs several
-          // labels() calls concurrently)
-          sc.setJobGroup(group, s"cc speculative round $specRound",
-            interruptOnCancel = true)
-          try Some(persistRound(smallStar(largeStar(cur)), specDir))
-          finally sc.clearJobGroup()
-        }
-      }
+      val prev = edges
+      edges = persistRound(smallStar(largeStar(prev)), reliable)
+      // the new round's lineage no longer reaches the previous one
+      roundDir(prev).foreach(deleteQuietly(sc.hadoopConfiguration, _))
+      round += 1
       converged = isStarForest(edges)
-      if (converged) {
-        cancelled.set(true)
-        sc.cancelJobGroup(group)
-        try { Await.result(spec, Duration.Inf); () }
-        catch { case scala.util.control.NonFatal(_) => () }
-        specDir.foreach(deleteQuietly(sc.hadoopConfiguration, _))
-      } else {
-        // a non-cancelled speculation either yields the round or throws
-        // the round's real failure — propagate the latter unchanged
-        edges = Await.result(spec, Duration.Inf).get
-        round = specRound
-        dropPrev(specDir)
-      }
     }
     // The final round's checkpoint backs the lazy result — defer its
-    // delete to JVM exit; restore the session's checkpoint root for
-    // whoever checkpoints next.
-    ckBase.foreach { _ =>
+    // delete to JVM exit.
+    roundDir(edges).foreach { d =>
       checkpointCleanupHook
-      prevDir.foreach(d => leftoverCheckpointDirs.add((sc.hadoopConfiguration, d)))
-      origCkDir.foreach(sc.setCheckpointDir)
+      leftoverCheckpointDirs.add((sc.hadoopConfiguration, d))
     }
     require(converged, s"connected components did not converge in $maxRounds rounds")
     // Converged edge set is a star forest (v, m); hubs m label themselves.

@@ -84,7 +84,10 @@ object GoldenRecord {
       idCol: String, priceCol: String, sizeCol: String,
       simPairs: DataFrame): DataFrame = {
     val bc = blockCols.map(col)
-    val perName = parts.groupBy(bc :+ col(nameCol): _*)
+    // a null name matches no similarity pair, so its parts carry no edge
+    // (the uncontracted pair join drops them) — never a supernode
+    val perName = parts.filter(col(nameCol).isNotNull)
+      .groupBy(bc :+ col(nameCol): _*)
       .agg(count(lit(1)).as("cnt"), min(col(idCol)).as("mk"),
         min(col(priceCol)).as("mp"), max(col(sizeCol)).as("ms"))
       .localCheckpoint(false)

@@ -86,25 +86,18 @@ object Stages {
 
   /** Stage 3 (`process_to_curated.py`): tokenize → drop sequence → sink.
     * The per-row Python tokenizer loop becomes a data-parallel UDF; tokens
-    * stay an array column (F3) — the 1,024-wide scalar pivot is only a sink
-    * option.
+    * stay an array column (F3): the reference's scalar `token_i` column is
+    * `tokens[i]`.
     */
   def processToCurated(
       staging: DataFrame,
       zones: Zones,
       splitName: String,
-      maxLength: Int = EsmTokenizer.DefaultMaxLength,
-      widePivot: Boolean = false): DataFrame = {
+      maxLength: Int = EsmTokenizer.DefaultMaxLength): DataFrame = {
     Clean.requireColumns(staging, "sequence")
-    val tok = staging
+    val out = staging
       .withColumn("tokens", EsmTokenizer.tokenizeCol(col("sequence"), maxLength))
       .drop("sequence")
-    val out =
-      if (widePivot)
-        tok.select(
-          tok.columns.filterNot(_ == "tokens").map(col).toSeq ++
-            EsmTokenizer.wideTokens(col("tokens"), maxLength): _*)
-      else tok
     Zones.writeParquet(out, s"${zones.curated}/tokenized_$splitName")
     out
   }

@@ -4,7 +4,8 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference,
+  CommonExpressionRef, Expression, RuntimeReplaceable, With}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -162,11 +163,19 @@ object GraftDml {
   /** Render an expression as SQL that re-resolves against a FRESH scan
     * of the same table: qualifiers (`spark_catalog.default.t.c`) name
     * THIS statement's relation instance and would not resolve there, so
-    * attributes render bare.
+    * attributes render bare. A runtime-replaceable expression (`BETWEEN`)
+    * renders from its parameters, which are not tree children and keep
+    * their qualifiers, so one that reads a column renders through its
+    * `replacement` instead — with the common-subexpression `With` wrapper
+    * (no SQL form of its own) inlined.
     */
   private[sources] def renderSql(e: Expression): String =
-    e.transform {
+    e.transformUp {
       case a: AttributeReference => a.withQualifier(Nil)
+      case With(child, defs) => child.transform {
+        case r: CommonExpressionRef => defs.find(_.id == r.id).get.child
+      }
+      case r: RuntimeReplaceable if r.references.nonEmpty => r.replacement
     }.sql
 }
 

@@ -211,6 +211,32 @@ class TxLogSpec extends AnyFunSuite {
       "overwrite must reset the zone maps with the live set")
   }
 
+  test("date zone maps of pre-1582 dates written with LEGACY rebase never skip live rows") {
+    // LEGACY writes hybrid-calendar day counts into the parquet footers;
+    // pushed-down literals are proleptic, so zone maps must be proleptic
+    val key = "spark.sql.parquet.datetimeRebaseModeInWrite"
+    val prev = spark.conf.getOption(key)
+    val root = freshTable()
+    val days = Seq("1000-01-01", "1000-01-04", "1000-01-07", "1000-01-10", "1500-06-15")
+    val src = {
+      import spark.implicits._
+      days.zipWithIndex.map { case (d, i) => (i.toLong, d) }.toDF("id", "s")
+        .select(col("id"), to_date(col("s")).as("d"))
+    }
+    spark.conf.set(key, "LEGACY")
+    try days.indices.foreach { i =>
+      TxLog.commit(spark, root, src.filter(col("id") === i.toLong).coalesce(1),
+        TxLog.Append, statsCols = Seq("d"))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    def ids(df: org.apache.spark.sql.DataFrame, lo: String, hi: String): Seq[Long] =
+      df.filter(col("d").between(to_date(lit(lo)), to_date(lit(hi))))
+        .select("id").collect().map(_.getLong(0)).toSeq.sorted
+    val snap = TxLog.snapshot(spark, root)
+    for ((lo, hi) <- days.map(d => (d, d)) ++ Seq(
+        ("1000-01-02", "1000-01-08"), ("0999-12-20", "1000-01-01"), ("1000-01-10", "1600-01-01")))
+      assert(ids(snap, lo, hi) === ids(src, lo, hi), s"range [$lo, $hi]")
+  }
+
   test("optimize compacts and range-clusters without changing content or history") {
     val root = freshTable()
     // 6 interleaved commits: ids NOT clustered by file

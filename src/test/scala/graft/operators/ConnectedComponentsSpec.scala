@@ -116,26 +116,91 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   }
 
   test("reliable-checkpoint path labels correctly and deletes intermediate round dirs") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.jdk.CollectionConverters._
     // A chain needs several star rounds — exactly the case that used to
     // leave one checkpoint dir per round on disk for the session lifetime.
     val ckRoot = java.nio.file.Files.createTempDirectory("graft_cc_ck").toFile
     val sc = spark.sparkContext
     val before = sc.getCheckpointDir
     sc.setCheckpointDir(ckRoot.getAbsolutePath)
+    val sessionDir = sc.getCheckpointDir
+    // every value the session's checkpoint dir takes while labels() runs
+    val seenDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[Option[String]]()
+    @volatile var watching = true
+    val watcher = new Thread(() =>
+      while (watching) { seenDirs.add(sc.getCheckpointDir); Thread.sleep(1) })
+    watcher.start()
+    // Spark checkpoints each RDD into its own rdd-N dir under the root
+    def find(f: java.io.File): Seq[java.io.File] =
+      Seq(f) ++ Option(f.listFiles()).toSeq.flatten.flatMap(find)
+    def roundDirs: Seq[java.io.File] =
+      find(ckRoot).filter(f => f.isDirectory && f.getName.startsWith("rdd-"))
     try {
       val edges = (0L until 19L).map(i => (i, i + 1))
       val got = ccLabels(edges)
       assert(got === (0L to 19L).map(_ -> 0L).toMap)
-      // collectFirst the per-call prefix: all round dirs but the final one
-      // must already be gone (the final backs the result until JVM exit).
-      def find(f: java.io.File): Seq[java.io.File] =
-        Seq(f) ++ Option(f.listFiles()).toSeq.flatten.flatMap(find)
-      val roundDirs = find(ckRoot).filter(_.getName.startsWith("round-"))
+      // all round dirs but the final one must already be gone (the final
+      // backs the result until JVM exit)
       assert(roundDirs.length === 1, s"leftover round dirs: ${roundDirs.mkString(", ")}")
+      // two concurrent callers on one session, each leaving its final dir
+      val graphs = Seq(
+        (100L until 130L).map(i => (i, i + 1)),
+        (for { i <- 0L to 4L; j <- i + 1 to 4L } yield (i, j)) ++ Seq((4L, 50L), (50L, 51L), (60L, 61L)))
+      val labelled = Await.result(Future.sequence(graphs.map(g => Future(ccLabels(g)))), 5.minutes)
+      graphs.zip(labelled).foreach { case (g, l) =>
+        assert(l === unionFind(g.flatMap(e => Seq(e, e.swap))))
+      }
+      assert(roundDirs.length === 3, s"round dirs: ${roundDirs.mkString(", ")}")
     } finally {
+      watching = false
+      watcher.join()
       sc.setCheckpointDir(before.orNull) // Option(null) → None inside Spark
-      ()
     }
+    assert(seenDirs.asScala.toSet === Set(sessionDir))
+  }
+
+  test("every job labels() starts runs under the caller's job group") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val chain = (0L until 19L).map(i => (i, i + 1)).toDF("a", "b")
+    val caller = s"cc-caller-${java.util.UUID.randomUUID()}"
+    // the job group of every job started by one labels() call, delimited
+    // by one fence job before and after it (listener events are async)
+    def jobGroupsOfOneCall(): Seq[String] = {
+      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          groups.add(Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+      }
+      val tag = java.util.UUID.randomUUID().toString
+      def fence(name: String): Unit = {
+        sc.setJobGroup(name, name)
+        sc.parallelize(Seq(1), 1).count()
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (!groups.contains(name) && System.nanoTime() < deadline) Thread.sleep(10)
+        assert(groups.contains(name), s"listener never saw fence $name")
+      }
+      sc.addSparkListener(listener)
+      try {
+        fence(s"$tag-begin")
+        sc.setJobGroup(caller, "connected components caller")
+        ConnectedComponents.labels(chain, "a", "b")
+        fence(s"$tag-end")
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+      val all = groups.asScala.toSeq
+      all.slice(all.lastIndexOf(s"$tag-begin") + 1, all.indexOf(s"$tag-end"))
+    }
+    val first = jobGroupsOfOneCall()
+    assert(first.nonEmpty && first.forall(_ == caller), s"job groups: ${first.distinct}")
+    assert(jobGroupsOfOneCall().length === first.length)
   }
 
   test("size distribution counts components per size with removable docs") {

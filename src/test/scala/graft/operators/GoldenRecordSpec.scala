@@ -122,6 +122,16 @@ class GoldenRecordSpec extends AnyFunSuite {
     assert(sorted(viaContraction(b, sn)) == Seq("1|2|2|10|2", "3|2|2|5|9"))
   }
 
+  test("null-named parts form no cluster, as on the uncontracted path") {
+    // two null names in one block: the name-pair join links neither part
+    val (b, sn) = synth(
+      Seq((1L, "B1", "T1", null, 10L, 1L), (2L, "B1", "T1", null, 20L, 2L),
+        (3L, "B2", "T1", "aa", 30L, 3L), (4L, "B2", "T1", "aa", 40L, 4L)),
+      Seq.empty)
+    check(b, sn)
+    assert(sorted(viaContraction(b, sn)) == Seq("3|2|1|30|4"))
+  }
+
   test("mixed same-name multiplicity and similarity chain in one block") {
     val (b, sn) = synth(
       Seq((1L, "B1", "T1", "aa", 10L, 1L), (2L, "B1", "T1", "aa", 9L, 8L),

@@ -171,6 +171,24 @@ class GraftDataSourceSpec extends AnyFunSuite {
     } finally s2.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
+  test("SQL DELETE / UPDATE with a BETWEEN predicate") {
+    val root = Zones.tempDir("dsbetween")
+    TxLog.commit(spark, root, batch(0, 100).coalesce(1), TxLog.Append,
+      statsCols = Seq("id"))
+    val s2 = GraftSession.withDml(spark)
+    val tbl = s"graft_btw_${java.util.UUID.randomUUID().toString.take(8).replace("-", "")}"
+    s2.sql(s"CREATE TABLE $tbl USING graft LOCATION '$root'")
+    try {
+      s2.sql(s"DELETE FROM $tbl WHERE id BETWEEN 20 AND 29")
+      s2.sql(s"UPDATE $tbl SET payload = 'u' WHERE id BETWEEN 95 AND 200")
+      val rows = TxLog.snapshot(spark, root).collect()
+        .map(r => r.getAs[Long]("id") -> r.getAs[String]("payload")).toMap
+      val expected = (0L until 100L).filterNot(i => i >= 20L && i <= 29L)
+        .map(i => i -> (if (i >= 95L) "u" else s"v-$i")).toMap
+      assert(rows === expected)
+    } finally s2.sql(s"DROP TABLE IF EXISTS $tbl")
+  }
+
   test("SQL INSERT: append, overwrite, and atomic partition replace through the log") {
     val root = Zones.tempDir("dsins")
     import spark.implicits._
