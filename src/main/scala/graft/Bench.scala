@@ -54,9 +54,11 @@ object Bench {
     val round = sys.env.getOrElse("SPARK_GRAFT_ROUND", deriveRound())
     // never silently overwrite an existing local bench file: round 7's
     // driver run clobbered the committed builder run because both
-    // defaulted to the same literal — collide into a fresh suffixed name
+    // defaulted to the same literal — collide into a fresh suffixed name.
+    // The default lands in the working directory (the checkout under
+    // `sbt run`), like the VERDICT.md the round is derived from
     val fullPath = sys.env.get("SPARK_GRAFT_BENCH_OUT").getOrElse {
-      val base = s"/root/repo/BENCH_LOCAL_r$round"
+      val base = java.nio.file.Paths.get(s"BENCH_LOCAL_r$round").toAbsolutePath.toString
       Iterator.single(s"$base.json")
         .concat(Iterator.from(2).map(k => s"$base.$k.json"))
         .find(p => !java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
@@ -79,7 +81,8 @@ object Bench {
   /** The current build round, derived from the newest driver artifact
     * (`VERDICT.md` header "round N" describes the PREVIOUS round) so the
     * default bench filename can't collide with a past round's committed
-    * history. Env `SPARK_GRAFT_ROUND` still overrides.
+    * history. `VERDICT.md` is read from the working directory. Env
+    * `SPARK_GRAFT_ROUND` still overrides.
     */
   private def deriveRound(): String =
     try {
@@ -87,7 +90,7 @@ object Bench {
       // default (ASCII) decoder with MalformedInputException
       val head = new String(
         java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/root/repo/VERDICT.md")),
+          java.nio.file.Paths.get("VERDICT.md")),
         java.nio.charset.StandardCharsets.UTF_8)
       val n = "round (\\d+)".r.findFirstMatchIn(head.linesIterator.next())
         .map(_.group(1).toInt).getOrElse(0)

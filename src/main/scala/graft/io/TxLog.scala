@@ -7,7 +7,9 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.util.matching.Regex
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, expr, input_file_name, lit, max, min}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, expr, input_file_name, lit, max, min, when}
+import org.apache.spark.storage.StorageLevel
 
 /** Minimal lakehouse transaction log over parquet — the append/overwrite
   * commit protocol of Delta Lake (Armbrust et al., VLDB 2020) re-derived at
@@ -1984,19 +1986,79 @@ object TxLog {
     r.partitionBy.getOrElse(throw new IllegalStateException(
       s"txlog: $root has a mixed partition layout; restore a clean version first"))
 
+  /** Which of `ranges` some non-null `keyCol` value of `updates` lands
+    * inside (indexes into `ranges`), and whether `updates` has any
+    * non-null key at all: ONE shuffle-free job, each task checking its
+    * own keys against the broadcast `[lo, hi]` arrays and returning only
+    * the distinct ranges it hit.
+    */
+  private def keyHits(
+      spark: SparkSession,
+      updates: DataFrame,
+      keyCol: String,
+      ranges: Seq[(Long, Long)]): (Set[Int], Boolean) = {
+    val zones = spark.sparkContext.broadcast(
+      (ranges.map(_._1).toArray, ranges.map(_._2).toArray))
+    try {
+      val perTask = updates.select(col(keyCol).cast("long")).queryExecution.toRdd
+        .mapPartitions { rows =>
+          val (lo, hi) = zones.value
+          val hit = new java.util.BitSet(lo.length)
+          var any = false
+          rows.foreach { row =>
+            if (!row.isNullAt(0)) {
+              any = true
+              val k = row.getLong(0)
+              var i = 0
+              while (i < lo.length) {
+                if (lo(i) <= k && k <= hi(i)) hit.set(i)
+                i += 1
+              }
+            }
+          }
+          Iterator.single((any, hit.stream().toArray))
+        }.collect()
+      (perTask.iterator.flatMap(_._2).toSet, perTask.exists(_._1))
+    } finally zones.destroy()
+  }
+
   /** File-granular copy-on-write MERGE (upsert): rows of `updates`
     * replace current rows sharing `keyCol`; unmatched update rows
-    * insert. Only files whose `keyCol` zone map can intersect the
-    * updates' key range are rewritten — every other live file is carried
-    * into the new manifest BY REFERENCE (data files are immutable, so
-    * re-listing is free), keeping its stats. Files without `keyCol`
-    * stats are conservatively rewritten. The commit cost is therefore
-    * proportional to the files the batch TOUCHES, not to the table — the
-    * difference between a bounded CDC-apply commit and an O(table)
-    * commit (round 7 rewrote the whole table; the design it documented
-    * as "noted, not built" is built here, and TxLogSpec asserts the
-    * manifest diff). Rewritten and inserted files get fresh `keyCol`
-    * zone maps so the NEXT merge stays file-granular.
+    * insert. A null key never matches (it inserts), and every update row
+    * of a matched key lands, duplicates included. One pass:
+    *
+    *  1. Touched files: ONE shuffle-free job probes each update key
+    *     against the `keyCol` zone maps ([[keyHits]]). A file is
+    *     rewritten iff some update key lies inside its `[lo, hi]`; files
+    *     without `keyCol` stats are conservatively always rewritten, and
+    *     a batch with no non-null key touches nothing. A non-integral key
+    *     has no zone maps, so it rewrites the whole table. Every other
+    *     live file is carried into the new manifest BY REFERENCE (data
+    *     files are immutable), keeping its stats — the commit costs what
+    *     the batch touches, not the table.
+    *  2. Tagging: the touched rows and the update rows, each tagged with
+    *     its side, meet in ONE shuffle — a window over `keyCol` that sees
+    *     whether a key occurs on both sides. Each row gets its
+    *     `_change_type`: `update_preimage` / `update_postimage` for a
+    *     matched key, `insert` for an unmatched update row, null for a
+    *     kept old row. When the touched files' zone maps are disjoint,
+    *     the shuffle is by key RANGE, cut at every touched `[lo, hi]`
+    *     edge: each touched file's rows stay together in one key-sorted
+    *     partition and the keys between or beyond them get their own, so
+    *     the rewrite keeps the table's layout. Otherwise (overlapping or
+    *     missing zone maps) it hashes on `keyCol`.
+    *  3. Writes: the tagged rows are persisted once and feed both writes
+    *     — the change files (`_change_data/`, every row with a change
+    *     type, so changes() and the streaming source survive the rewrite)
+    *     and the data commit (every row but the pre-images), whose files
+    *     get fresh `keyCol` zone maps so the NEXT merge stays
+    *     file-granular.
+    *
+    * Both outputs keep the key column first, then the touched files'
+    * columns, then columns only the updates have (change files put
+    * `_change_type` before those). When nothing is touched the merge is
+    * a pure insert: one append commit, whose files ARE its row-level
+    * delta, so it writes no change files.
     *
     * Serializable read-modify-write: the commit pins the version the
     * rewrite was based on; if anything commits in between, the
@@ -2006,98 +2068,90 @@ object TxLog {
     * unreferenced garbage until a vacuum.
     */
   def merge(spark: SparkSession, root: String, updates: DataFrame, keyCol: String): Long = {
-    val keyL = col(keyCol).cast("long")
     // zone maps are long-valued: only an integral key gets file-granular
     // matching; any other key type is a classic whole-table copy-on-write
     val keyIsIntegral = updates.schema.fields
       .find(_.name == keyCol).exists(f => isIntegral(f.dataType))
-    // the updates' key span: one tiny agg job, reused across retries
-    val kr = if (keyIsIntegral) Some(updates.agg(min(keyL), max(keyL)).head()) else None
     readModifyWrite(root, "merge") { (base, r) =>
       // zone maps are keyed by the key's PHYSICAL name (identity unless
       // the column was renamed)
       val physKey = r.physName(keyCol)
-      val (statted, unstatted) =
-        r.files.partition(p => r.stats.get(p).exists(_.contains(physKey)))
-      val touched: Vector[String] =
-        if (!keyIsIntegral) r.files // no zone maps possible: rewrite all
-        else if (kr.get.isNullAt(0)) Vector.empty // no non-null update keys: pure insert
+      // the touched files, and the key ranges of those with zone maps
+      val (touched: Set[String], spans: Seq[(Long, Long)]) =
+        if (!keyIsIntegral || r.entries.isEmpty) (r.files.toSet, Nil)
         else {
-          val krr = kr.get
-          // coarse pass: zone maps intersecting the batch's [min, max]
-          // span — cheap, but a single outlier insert key would widen the
-          // span over the whole table, so refine each span candidate with
-          // an EXACT hit test: one broadcast interval join of the update
-          // keys against the candidates' [lo, hi] ranges (Delta's
-          // file-matching join). A file is rewritten iff SOME update key
-          // actually lands inside its range; `keyCol`-stats-free files
-          // are conservatively always rewritten.
-          val spanC = statted.filter { p =>
-            val (lo, hi) = r.stats(p)(physKey)
-            hi >= krr.getLong(0) && lo <= krr.getLong(1)
+          val (statted, unstatted) = r.entries.partition(_.stats.contains(physKey))
+          val (hit, anyKey) = keyHits(spark, updates, keyCol, statted.map(_.stats(physKey)))
+          if (!anyKey) (Set.empty[String], Nil)
+          else {
+            val hitFiles = hit.toSeq.map(statted)
+            ((unstatted ++ hitFiles).map(_.path).toSet, hitFiles.map(_.stats(physKey)))
           }
-          val hit: Set[String] =
-            if (spanC.isEmpty) Set.empty
-            else {
-              val ranges = spark.createDataFrame(spanC.map { p =>
-                val (lo, hi) = r.stats(p)(physKey); (p, lo, hi)
-              }).toDF("_p", "_flo", "_fhi")
-              updates.select(keyL.as("_k"))
-                .join(org.apache.spark.sql.functions.broadcast(ranges),
-                  col("_k") >= col("_flo") && col("_k") <= col("_fhi"))
-                .select("_p").distinct().collect().map(_.getString(0)).toSet
-            }
-          unstatted ++ spanC.filter(hit)
         }
       val layout = layoutOf(root, r)
       if (touched.isEmpty)
-          // no live file can hold a matched key: the merge is a pure
-          // insert — ONE append commit, no rewrite, smallest manifest
-          // (an append's files ARE its row-level delta, so no change
-          // files are needed for the CDF to read through it)
-          commit(spark, root, updates, Append,
-            statsCols = Seq(keyCol), expectHead = Some(base),
-            partitionBy = layout, op = Some("MERGE"))
-        else {
-          val untouched = {
-            val t = touched.toSet
-            r.entries.filterNot(e => t(e.path))
-          }
-          // read the touched files THROUGH the file index: the table's
-          // recorded (union) schema backfills columns they lack — the
-          // mergeSchema behavior, resolved from the log — and hive
-          // partition values attach from the k=v dirs, so a merge on a
-          // partitioned table round-trips the layout
-          val old = TxLogFileIndex.read(spark, root, r.copy(entries =
-            r.entries.filter(e => touched.contains(e.path))))
-          val updKeys = updates.select(keyCol).distinct()
-          val rewritten = old
-            .join(updKeys, Seq(keyCol), "left_anti")
-            .unionByName(updates, allowMissingColumns = true)
-          // the merge KNOWS its row-level delta right here — persist it
-          // under _change_data/ so changes() and the streaming source
-          // survive the rewrite (Delta's CDF): pre/post images for
-          // matched keys, inserts for the rest. Cost: one more pass over
-          // the TOUCHED files only — proportional to the batch, and the
-          // one moment the delta is computable at all
-          val matched = old.join(updKeys, Seq(keyCol), "left_semi")
-            .select(keyCol).distinct()
-          val pre = old.join(matched, Seq(keyCol), "left_semi")
-            .withColumn("_change_type", lit("update_preimage"))
-          val post = updates.join(matched, Seq(keyCol), "left_semi")
-            .withColumn("_change_type", lit("update_postimage"))
-          val ins = updates.join(matched, Seq(keyCol), "left_anti")
-            .withColumn("_change_type", lit("insert"))
+        commit(spark, root, updates, Append,
+          statsCols = Seq(keyCol), expectHead = Some(base),
+          partitionBy = layout, op = Some("MERGE"))
+      else {
+        // read the touched files THROUGH the file index: the table's
+        // recorded (union) schema backfills columns they lack — the
+        // mergeSchema behavior, resolved from the log — and hive
+        // partition values attach from the k=v dirs, so a merge on a
+        // partitioned table round-trips the layout
+        val old = TxLogFileIndex.read(spark, root,
+          r.copy(entries = r.entries.filter(e => touched(e.path))))
+        val side = "_merge_side"
+        val both = old.select((col(keyCol) +: old.columns.toSeq
+            .filterNot(_ == keyCol).map(col)): _*)
+          .withColumn(side, lit(0))
+          .unionByName(updates.withColumn(side, lit(1)), allowMissingColumns = true)
+        // range cuts at the touched files' edges, when their zone maps
+        // are disjoint. A row's range is the number of cuts at or below
+        // its key, minus one, mod the range count: the lowest touched
+        // file's keys are range 0 — a write task always writes a file
+        // for partition 0, even an empty one, and this range holds at
+        // least the update key that touched the file — and keys below
+        // every cut (null keys too) take the last range
+        val sorted = spans.sortBy(_._1)
+        val cuts: Seq[Long] =
+          if (sorted.zip(sorted.drop(1)).exists { case (a, b) => a._2 >= b._1 }) Nil
+          else sorted.flatMap { case (lo, hi) =>
+            lo +: (if (hi < Long.MaxValue) Seq(hi + 1) else Nil)
+          }.distinct
+        val range = "_merge_range"
+        val ranged = both.withColumn(range, cuts
+          .map(c => when(col(keyCol) >= c, 1).otherwise(0))
+          .foldLeft(lit(cuts.size))(_ + _) % (cuts.size + 1))
+        val byKey = Window.partitionBy(col(range), col(keyCol))
+        val matched = col(keyCol).isNotNull &&
+          min(side).over(byKey) === 0 && max(side).over(byKey) === 1
+        val changeType = col("_change_type")
+        val tagged =
+          (if (cuts.isEmpty) ranged else ranged.repartitionById(cuts.size + 1, col(range)))
+            .withColumn("_change_type",
+              when(matched, when(col(side) === 0, "update_preimage")
+                .otherwise("update_postimage"))
+                .when(col(side) === 1, "insert"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          // [key, touched files' columns] ++ [_change_type] ++ [update-only]
+          val (lead, sideOn) = both.columns.toSeq.span(_ != side)
+          val updOnly = sideOn.tail
           val cdfDir = s"txn-${java.util.UUID.randomUUID().toString.take(12)}"
-          toPhysical(pre.unionByName(post, allowMissingColumns = true)
-            .unionByName(ins, allowMissingColumns = true), r)
+          toPhysical(tagged.filter(changeType.isNotNull)
+            .select((lead ++ ("_change_type" +: updOnly)).map(col): _*), r)
             .write.mode(SaveMode.ErrorIfExists)
             .parquet(s"$root/_change_data/$cdfDir")
-          commit(spark, root, rewritten, Overwrite,
-            statsCols = Seq(keyCol), carry = untouched,
+          commit(spark, root,
+            tagged.filter(changeType.isNull || changeType =!= "update_preimage")
+              .select((lead ++ updOnly).map(col): _*),
+            Overwrite, statsCols = Seq(keyCol),
+            carry = r.entries.filterNot(e => touched(e.path)),
             carrySchema = r.schema, expectHead = Some(base),
             cdf = Some(cdfDir), partitionBy = layout, op = Some("MERGE"))
-        }
+        } finally tagged.unpersist()
+      }
     }
   }
 
@@ -2452,7 +2506,7 @@ object TxLog {
       predicate: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column],
       statsCols: Seq[String] = Nil): Long = {
-    import org.apache.spark.sql.functions.{coalesce, when}
+    import org.apache.spark.sql.functions.coalesce
     require(set.nonEmpty, "txlog: UPDATE needs at least one SET assignment")
     readModifyWrite(root, "update") { (base, r) =>
       val touched =
@@ -2902,7 +2956,7 @@ object TxLog {
         // every change set writes under its own uuid dir) — a per-version
         // read unioned N times would bloat the plan linearly with the
         // catch-up range
-        import org.apache.spark.sql.functions.{coalesce, element_at, regexp_extract, when}
+        import org.apache.spark.sql.functions.{coalesce, element_at, regexp_extract}
         val all = nonEmpty.flatMap(_._2).map(f => s"$root/$f")
         val dirToV = nonEmpty.flatMap { case (v, fs) =>
           fs.map(f => f.split("/")(1) -> v)

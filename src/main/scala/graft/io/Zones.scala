@@ -32,7 +32,9 @@ object Zones {
     * let a concurrent invocation's Overwrite delete files a previous
     * invocation's lazy scan already listed — a real bug this replaced),
     * deleted recursively at JVM exit so repeated bench/verify runs don't
-    * accumulate garbage under /tmp. Deletion can't happen earlier: the
+    * accumulate garbage in the temp dir. The path lives under the JVM's
+    * `java.io.tmpdir`, so a run that pins its temp dir keeps every zone
+    * inside it. Deletion can't happen earlier: the
     * returned DataFrames are lazy, so the files must outlive the call.
     * ONE shutdown hook drains a shared queue — registering a hook thread
     * per call would accumulate live Threads for the process lifetime.
@@ -48,7 +50,8 @@ object Zones {
   }
 
   def tempDir(prefix: String): String = {
-    val path = s"/tmp/${prefix}_${java.util.UUID.randomUUID().toString.take(8)}"
+    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      s"${prefix}_${java.util.UUID.randomUUID().toString.take(8)}").toString
     tempDirHook // register the single hook on first use
     tempDirs.add(new java.io.File(path))
     path

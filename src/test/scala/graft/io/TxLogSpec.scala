@@ -158,6 +158,141 @@ class TxLogSpec extends AnyFunSuite {
     assert(old === "row-4")
   }
 
+  /** Appends `df` as one zone-mapped file; returns the file's path. */
+  private def appendFile(root: String, df: org.apache.spark.sql.DataFrame): String = {
+    val before = TxLog.liveFiles(root, TxLog.headVersion(root)).toSet
+    val v = TxLog.commit(spark, root, df.coalesce(1), TxLog.Append, statsCols = Seq("id"))
+    val added = TxLog.liveFiles(root, v).toSet -- before
+    assert(added.size === 1)
+    added.head
+  }
+
+  private def lastAction(root: String): String =
+    TxLog.history(spark, root).orderBy(desc("version")).head().getString(1)
+
+  /** The version's change rows as (id, payload, _change_type), sorted. */
+  private def changeRows(root: String, v: Long): Seq[(Option[Long], String, String)] =
+    TxLog.changes(spark, root, v - 1, v, withChangeType = true)
+      .select("id", "payload", "_change_type").collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getString(1), r.getString(2)))
+      .toSeq.sortBy(t => (t._1, t._3, t._2))
+
+  test("merge rewrites every file whose zone map holds a key, overlapping ranges included") {
+    import spark.implicits._
+    val root = freshTable()
+    val a = appendFile(root, Seq(0L, 5L, 10L).map(i => (i, s"row-$i")).toDF("id", "payload"))
+    val b = appendFile(root, Seq(8L, 12L, 20L).map(i => (i, s"row-$i")).toDF("id", "payload"))
+    val c = appendFile(root, Seq(30L, 40L).map(i => (i, s"row-$i")).toDF("id", "payload"))
+    // 9 lies inside both [0, 10] and [8, 20] and matches no row: both rewrite
+    TxLog.merge(spark, root, Seq((9L, "NEW-9")).toDF("id", "payload"), "id")
+    val after = TxLog.liveFiles(root, TxLog.headVersion(root)).toSet
+    assert(!after(a) && !after(b) && after(c), s"live after the merge: $after")
+    assert(lastAction(root) === "overwrite")
+    // 25 falls in the gap between [0, 20] and [30, 40]: nothing rewrites
+    TxLog.merge(spark, root, Seq((25L, "NEW-25")).toDF("id", "payload"), "id")
+    assert(after.subsetOf(TxLog.liveFiles(root, TxLog.headVersion(root)).toSet))
+    assert(lastAction(root) === "append")
+    val ids = TxLog.snapshot(spark, root).select("id").as[Long].collect().toSeq.sorted
+    assert(ids === Seq(0L, 5L, 8L, 9L, 10L, 12L, 20L, 25L, 30L, 40L))
+  }
+
+  test("a null-key update row inserts and never replaces a live null-key row") {
+    import spark.implicits._
+    val root = freshTable()
+    appendFile(root, Seq((Some(1L), "one"), (None, "live-null"), (Some(2L), "two"))
+      .toDF("id", "payload"))
+    val v = TxLog.merge(spark, root,
+      Seq((None: Option[Long], "upd-null"), (Some(1L), "U1")).toDF("id", "payload"), "id")
+    val now = TxLog.snapshot(spark, root).select("id", "payload").as[(Option[Long], String)]
+      .collect().toSeq.sortBy(t => (t._1, t._2))
+    assert(now === Seq((None, "live-null"), (None, "upd-null"), (Some(1L), "U1"), (Some(2L), "two")))
+    assert(changeRows(root, v) === Seq(
+      (None, "upd-null", "insert"),
+      (Some(1L), "U1", "update_postimage"),
+      (Some(1L), "one", "update_preimage")))
+  }
+
+  test("duplicate update keys all land, each as an update_postimage") {
+    import spark.implicits._
+    val root = freshTable()
+    appendFile(root, batch(0, 5))
+    val v = TxLog.merge(spark, root,
+      Seq((2L, "A"), (2L, "B"), (7L, "C"), (7L, "D")).toDF("id", "payload"), "id")
+    val now = TxLog.snapshot(spark, root).select("id", "payload").as[(Long, String)]
+      .collect().toSeq.sorted
+    assert(now === Seq(0L -> "row-0", 1L -> "row-1", 2L -> "A", 2L -> "B",
+      3L -> "row-3", 4L -> "row-4", 7L -> "C", 7L -> "D"))
+    assert(changeRows(root, v) === Seq(
+      (Some(2L), "A", "update_postimage"),
+      (Some(2L), "B", "update_postimage"),
+      (Some(2L), "row-2", "update_preimage"),
+      (Some(7L), "C", "insert"),
+      (Some(7L), "D", "insert")))
+  }
+
+  test("an all-null-key merge is a pure append: no file rewritten, no change files") {
+    import spark.implicits._
+    val root = freshTable()
+    appendFile(root, batch(0, 10))
+    val before = TxLog.liveFiles(root, TxLog.headVersion(root)).toSet
+    TxLog.merge(spark, root,
+      Seq((None: Option[Long], "n1"), (None: Option[Long], "n2")).toDF("id", "payload"), "id")
+    assert(lastAction(root) === "append")
+    assert(before.subsetOf(TxLog.liveFiles(root, TxLog.headVersion(root)).toSet))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "_change_data")))
+    assert(TxLog.snapshot(spark, root).count() === 12L)
+  }
+
+  test("merge writes data and change files with the key column first") {
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    val root = freshTable()
+    appendFile(root, Seq(("row-1", 10, 1L), ("row-2", 20, 2L)).toDF("payload", "n", "id"))
+    val v = TxLog.merge(spark, root,
+      Seq((2L, "U2", "t2"), (3L, "NEW-3", "t3")).toDF("id", "payload", "tag"), "id")
+    def fields(path: String): Seq[(String, DataType)] =
+      spark.read.parquet(path).schema.fields.map(f => f.name -> f.dataType).toSeq
+    val rewritten = TxLog.liveFiles(root, v).toSet -- TxLog.liveFiles(root, v - 1)
+    assert(rewritten.nonEmpty)
+    rewritten.foreach(f => assert(fields(f) === Seq("id" -> LongType,
+      "payload" -> StringType, "n" -> IntegerType, "tag" -> StringType)))
+    val changeFiles = new java.io.File(root, "_change_data").listFiles().toSeq
+    assert(changeFiles.size === 1)
+    assert(fields(changeFiles.head.getPath) === Seq("id" -> LongType,
+      "payload" -> StringType, "n" -> IntegerType, "_change_type" -> StringType,
+      "tag" -> StringType))
+  }
+
+  test("merge keeps the key layout: a later merge hitting one key rewrites one file") {
+    import spark.implicits._
+    val root = freshTable()
+    val v0 = TxLog.commit(spark, root, batch(0, 400).repartitionByRange(4, col("id")),
+      TxLog.Append, statsCols = Seq("id"))
+    val ranges = TxLog.liveStats(root, v0).values.map(_("id")).toSeq.sorted
+    assert(ranges.size === 4)
+    def mergeKeys(keys: Long*): Long =
+      TxLog.merge(spark, root, keys.map(k => (k, s"U-$k")).toDF("id", "payload"), "id")
+    def rewritten(v: Long): Int =
+      (TxLog.liveFiles(root, v - 1).toSet -- TxLog.liveFiles(root, v)).size
+    // touches the 2nd and 3rd files and inserts above every range
+    val first = mergeKeys(ranges(1)._1 + 10, ranges(2)._1 + 10, 5000L)
+    assert(rewritten(first) === 2)
+    val fresh = TxLog.liveStats(root, first) -- TxLog.liveFiles(root, v0)
+    val allowed = Seq(ranges(1), ranges(2), (5000L, 5000L))
+    fresh.values.map(_("id")).foreach { case (lo, hi) =>
+      assert(allowed.exists { case (a, b) => a <= lo && hi <= b },
+        s"rewritten file's zone map [$lo, $hi] leaves the touched ranges $allowed")
+    }
+    // a key of the untouched 4th file, then one of the rewritten 2nd file
+    assert(rewritten(mergeKeys(ranges(3)._1)) === 1)
+    assert(rewritten(mergeKeys(ranges(1)._1)) === 1)
+    val now = TxLog.snapshot(spark, root).select("id", "payload").as[(Long, String)]
+      .collect().toMap
+    assert(now.size === 401)
+    Seq(ranges(1)._1, ranges(1)._1 + 10, ranges(2)._1 + 10, ranges(3)._1, 5000L)
+      .foreach(k => assert(now(k) === s"U-$k"))
+  }
+
   test("checkpoints bound replay: reads above a checkpoint never touch older manifests") {
     val root = freshTable()
     // 25 commits with CheckpointEvery = 10 → checkpoints at v10 and v20
