@@ -1,16 +1,21 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.io.Zones
 import graft.functions.EsmTokenizer
-import graft.ops.{Clean, ClassWeights, LabelEncode, StratifiedSplit}
+import graft.ops.{Clean, LabelEncode, StratifiedSplit}
 
 /** The reference's three pipeline stages re-expressed as lazy Spark plans
   * (SURVEY.md §3). Each stage is one declarative DAG ending in sinks — no
-  * temp files, no driver-side data movement, no per-class loops.
+  * temp files, no per-class loops, and no driver-side data beyond stage 2's
+  * one-row-per-class size table.
   */
 object Stages {
 
@@ -29,12 +34,19 @@ object Stages {
     df
   }
 
+  /** What stage 2 returns. `train`/`dev`/`test` read one persisted split
+    * frame (`split`); [[unpersist]] releases it once the caller is done
+    * with them (they recompute from the raw zone if read afterwards).
+    * `labelMapping` and `classWeights` are local frames.
+    */
   final case class StagingOutputs(
       train: DataFrame,
       dev: DataFrame,
       test: DataFrame,
       labelMapping: DataFrame,
-      classWeights: DataFrame)
+      classWeights: DataFrame)(split: DataFrame) {
+    def unpersist(): Unit = { split.unpersist(); () }
+  }
 
   /** Columns of the staging split CSVs (what `preprocessToStaging` writes
     * after its drops) — [[graft.pipeline.ProcessToCurated]] reads with this
@@ -47,23 +59,44 @@ object Stages {
     StructField("class_encoded", LongType, nullable = true)))
 
   /** Stage 2 (`preprocess_to_staging.py`): dropna → label-encode →
-    * stratified split → class weights. One logical plan fanning into five
-    * sinks; the split never leaves the DataFrame domain (the reference's
-    * pandas→numpy→pandas round-trip collapses into window+CASE).
+    * stratified split → class weights, in two parts:
     *
-    * The split frame is PERSISTED before the fan-out: five sinks plus the
-    * returned frames would otherwise re-execute the dropna → join → window
-    * lineage once per action (~an order of magnitude of repeated work on
-    * the full dataset). Caller may `unpersist()` the returned frames'
-    * common ancestor when done; the cache is MEMORY_AND_DISK so an
-    * oversized split spills instead of evicting to recompute.
+    *  - ONE aggregation, `StratifiedSplit.splitSizes` over the cleaned
+    *    rows, collected to the driver — K rows, one per class (17,930 in
+    *    full Pfam), so bounded like the broadcast dictionary. Both small
+    *    outputs are local frames derived from it: the dictionary (keys in
+    *    Spark's string order, codes 0..K-1, as `LabelEncode.mapping`) and
+    *    the class weights (`n_min / n_train` over classes with train rows,
+    *    rounded by Spark's `round`, as `ClassWeights.weights` over the
+    *    train rows; SP1 fixes each class's train count from its size).
+    *  - The split: the cleaned rows joined to the broadcast dictionary, one
+    *    window exchange on the class code (`StratifiedSplit.withSplit`),
+    *    PERSISTED (MEMORY_AND_DISK, so an oversized split spills) because
+    *    three sinks and the returned frames read it. Its first write costs
+    *    three jobs under AQE (the exchange, filling the cache, the write),
+    *    each later sink one.
+    *
+    * Ten jobs in all: the collect (2), the two local sinks (1 each), the
+    * dictionary's broadcast (1), the three split sinks (5). Call
+    * [[StagingOutputs.unpersist]] when the returned frames are no longer
+    * needed.
     *
     * `orderCol`: a stable per-row key standing in for file order (SP1); the
     * raw zone has none, so ingest must provide one (e.g. shard path + line).
     */
   def preprocessToStaging(raw: DataFrame, zones: Zones, orderCol: String): StagingOutputs = {
-    val clean   = Clean.dropNa(raw)
-    val mapping = LabelEncode.mapping(clean, "family_accession")
+    val spark = raw.sparkSession
+    val clean = Clean.dropNa(raw)
+    val sizes = StratifiedSplit.splitSizes(clean, "family_accession")
+      .select("family_accession", "n_train").collect()
+      .map(r => r.getString(0) -> r.getLong(1))
+      .sortBy(_._1)(Utf8BinaryOrder)
+    val mapping = spark.createDataFrame(
+      sizes.indices.map(i => Row(sizes(i)._1, i.toLong)).asJava, MappingSchema)
+    val trainSizes = sizes.indices.collect { case i if sizes(i)._2 > 0 => Row(i.toLong, sizes(i)._2) }
+    val nMin = trainSizes.map(_.getLong(1)).minOption.getOrElse(0L)
+    val weights = spark.createDataFrame(trainSizes.asJava, TrainSizeSchema)
+      .select(col("class_encoded"), round(lit(nMin).cast("double") / col("n_train"), 6).as("weight"))
     val encoded = LabelEncode.encode(clean, mapping, "family_accession")
     val withSplit = StratifiedSplit
       .withSplit(encoded, "class_encoded", orderCol)
@@ -75,14 +108,28 @@ object Stages {
     val train   = one("train")
     val dev     = one("dev")
     val test    = one("test")
-    val weights = ClassWeights.weights(train, "class_encoded")
     Zones.writeCsv(mapping, s"${zones.staging}/label_mapping", single = true)
     Zones.writeCsv(weights, s"${zones.staging}/class_weights", single = true)
     Seq("train" -> train, "dev" -> dev, "test" -> test).foreach {
       case (n, d) => Zones.writeCsv(d.drop(orderCol), s"${zones.staging}/preprocessed_$n")
     }
-    StagingOutputs(train, dev, test, mapping, weights)
+    StagingOutputs(train, dev, test, mapping, weights)(withSplit)
   }
+
+  /** The dictionary's schema as `LabelEncode.mapping` produces it. */
+  private val MappingSchema = StructType(Seq(
+    StructField("family_accession", StringType, nullable = true),
+    StructField("class_encoded", LongType, nullable = false)))
+
+  private val TrainSizeSchema = StructType(Seq(
+    StructField("class_encoded", LongType, nullable = false),
+    StructField("n_train", LongType, nullable = false)))
+
+  /** Spark's default string order: unsigned bytes of the UTF-8 encoding
+    * (UTF-16 `compareTo` differs above U+FFFF).
+    */
+  private val Utf8BinaryOrder: Ordering[String] = (a: String, b: String) =>
+    java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
 
   /** Stage 3 (`process_to_curated.py`): tokenize → drop sequence → sink.
     * The per-row Python tokenizer loop becomes a data-parallel UDF; tokens

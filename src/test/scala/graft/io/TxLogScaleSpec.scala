@@ -116,38 +116,14 @@ class TxLogScaleSpec extends AnyFunSuite {
   }
 
   test("one merge with matched keys starts at most 5 Spark jobs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import spark.implicits._
-    val sc = spark.sparkContext
     val root = freshTable()
     TxLog.commit(spark, root, batch(0, 400).repartitionByRange(4, col("id")),
       TxLog.Append, statsCols = Seq("id"))
     assert(TxLog.liveStats(root, 1L).size === 4)
     val updates = Seq((150L, "U-150"), (250L, "U-250"), (5000L, "NEW-5000"))
       .toDF("id", "payload")
-    val tag = s"txlog-merge-${java.util.UUID.randomUUID()}"
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(tag, "merge under test")
-      TxLog.merge(spark, root, updates, "id")
-      // listener events are async: a fence job seen means every earlier
-      // job start was seen too
-      sc.setJobGroup(s"$tag-fence", "fence")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!groups.contains(s"$tag-fence") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(groups.contains(s"$tag-fence"), "listener never saw the fence job")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    val jobs = groups.toArray.count(_ == tag)
+    val (_, jobs) = TestSpark.jobsStartedBy(TxLog.merge(spark, root, updates, "id"))
     // touched files (1), the tagging shuffle (1), filling the cache (1),
     // the change files' write and the data write (2)
     assert(jobs >= 1 && jobs <= 5, s"one merge started $jobs Spark jobs")

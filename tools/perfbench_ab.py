@@ -2,7 +2,7 @@
 """A/B the repository benchmark: a git revision against the working tree.
 
     python3 tools/perfbench_ab.py [--rev HEAD] [--workload lakehouse] \
-        [--seeds 1,2,3,4,5] [--seconds 10]
+        [--seeds 1,2,3,4,5] [--seconds 10] [--trace]
 
 Exports `--rev` (default HEAD) with `git archive` into a temporary
 directory, then runs `perfbench/run.py` there ("parent") and in the
@@ -11,6 +11,9 @@ side goes first from seed to seed so slow drift of the host hits both
 sides alike. Prints, per workload, each end-to-end metric's median on
 both sides with the change in percent and how many seed pairs moved the
 better way, then the per-operation medians the runs log on stderr.
+With `--trace`, both sides run with `--trace 1`, which reports the
+per-layer metrics (`pipeline.preprocess_s`, `spark.stages`, ...) in place
+of the end-to-end ones; the same table then compares those.
 
 Exits 1 if any run fails or reports `correct: false`. Both sides build
 their own `.bench_build/`; the exported copy is deleted at the end.
@@ -29,11 +32,11 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OP_MEDIANS = re.compile(r"\[perfbench\] median s per operation: (.*)$", re.M)
 
 
-def run(tree, workload, seed, seconds):
+def run(tree, workload, seed, seconds, trace):
     """One benchmark run in `tree`; returns (metrics, per-op medians)."""
     p = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds)],
+         "--seed", str(seed), "--seconds", str(seconds), "--trace", str(int(trace))],
         cwd=tree, stdin=subprocess.DEVNULL, capture_output=True, text=True)
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
@@ -64,11 +67,14 @@ def main():
                     help="repeatable; default: both")
     ap.add_argument("--seeds", default="1,2,3,4,5", help="comma-separated seeds")
     ap.add_argument("--seconds", type=float, default=10)
+    ap.add_argument("--trace", action="store_true",
+                    help="run both sides with --trace 1 and compare the per-layer metrics")
     a = ap.parse_args()
     workloads = a.workload or ["batch", "lakehouse"]
     seeds = [int(s) for s in a.seeds.split(",") if s]
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
-        better = {m["name"]: m["better"] for m in json.load(fh)["end_to_end"]}
+        bench = json.load(fh)
+    better = {m["name"]: m["better"] for m in bench["end_to_end"] + bench["per_layer"]}
 
     parent = tempfile.mkdtemp(prefix="perfbench_ab_")
     try:
@@ -80,21 +86,24 @@ def main():
             for i, seed in enumerate(seeds):
                 order = [("parent", parent), ("change", ROOT)]
                 for side, tree in (order if i % 2 == 0 else order[::-1]):
-                    metrics, ops = run(tree, w, seed, a.seconds)
+                    metrics, ops = run(tree, w, seed, a.seconds, a.trace)
                     sides[side][0].append(metrics)
                     sides[side][1].append(ops)
                     print(f"[ab] {w} seed {seed} {side}: " + ", ".join(
                         f"{k} {v:.4g}" for k, v in sorted(metrics.items())), file=sys.stderr, flush=True)
-            print(f"== {w}: {a.rev} (parent) vs working tree (change), seeds {seeds} ==")
+            kind = "per-layer (--trace 1)" if a.trace else "end-to-end"
+            print(f"== {w}, {kind}: {a.rev} (parent) vs working tree (change), seeds {seeds} ==")
             (pm, po), (cm, co) = sides["parent"], sides["change"]
             # only what both sides report: an op or metric one side lacks
             # (added or renamed) has no pair to compare
             for k in sorted(set(pm[0]) & set(cm[0])):
                 p_med = statistics.median(r[k] for r in pm)
                 c_med = statistics.median(r[k] for r in cm)
+                if p_med == c_med == 0:  # a layer the workload never runs
+                    continue
                 sign = -1 if better.get(k) == "lower" else 1
                 wins = sum(1 for x, y in zip(pm, cm) if sign * (y[k] - x[k]) > 0)
-                print(f"{k:22s} parent {p_med:10.4g}  change {c_med:10.4g}  "
+                print(f"{k:30s} parent {p_med:10.4g}  change {c_med:10.4g}  "
                       f"{pct(p_med, c_med):+7.1f}%  better in {wins}/{len(seeds)} pairs")
             for k in sorted(set().union(*po) & set().union(*co)):
                 p_med = statistics.median(r[k] for r in po if k in r)
