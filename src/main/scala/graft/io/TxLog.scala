@@ -75,19 +75,10 @@ object TxLog {
     */
   final class ConstraintViolation(msg: String) extends RuntimeException(msg)
 
-  final case class Manifest(
-      version: Long,
-      action: String,
-      files: Seq[String],
-      cdf: Option[String] = None,
-      ts: Option[Long] = None,
-      dvRefs: Set[String] = Set.empty,
-      op: Option[String] = None)
-
   /** Per-file, per-column zone map carried by a manifest entry: min/max
     * of each stats column for data skipping (the Delta/Iceberg per-file
-    * stats idea). Serialized inline as
-    * `{"p":path,"s":{"col":[lo,hi],...}}` next to plain-string entries,
+    * stats idea). Carried inside each manifest entry (the `"s"` field of
+    * [[TxLogManifest]]'s entry encoding) next to plain-path entries,
     * so stats-free and stats-bearing commits interleave freely and a 2-D
     * clustered table (see [[graft.io.ZOrder]]) can carry both range
     * columns at once.
@@ -172,23 +163,6 @@ object TxLog {
   }
 
   private val versionFile: Regex = """v(\d{8})\.json""".r
-  // a manifest entry is either a bare "rel/path.parquet" or an object
-  // {"p":"rel/path.parquet","b":bytes,"s":{"col":[lo,hi],...},
-  //  "t":{"col":["lo","hi"],...},"m":{"col":"type",...},"d":[dvRef,...]}
-  // with "b"/"s"/"t"/"m"/"d" independently optional — group 1 = bare
-  // path, group 2 = obj path, group 3 = bytes, group 4 = integral stats
-  // body, group 5 = string stats body, group 6 = bloom column body,
-  // group 7 = deletion-vector refs
-  private val entryField: Regex =
-    """(?:"([^"{]+\.parquet)")|(?:\{"p":"([^"]+\.parquet)"(?:,"b":(\d+))?(?:,"s":\{([^}]*)\})?(?:,"t":\{([^}]*)\})?(?:,"m":\{([^}]*)\})?(?:,"d":\[([^\]]*)\])?(?:,"r":(\d+))?(?:,"x":(\d+))?\})""".r
-  private val bloomColField: Regex = """"([^"]+)":"([^"]*)"""".r
-  private val dvRefField: Regex = """"([^"]+)"""".r
-  private val colStatField: Regex = """"([^"]+)":\[(-?\d+),(-?\d+)\]""".r
-  // string stat: "col":["lo","hi"] — truncated-max entries carry null;
-  // values are \uXXXX-escaped (see escStr), so a raw quote/brace can
-  // never terminate the stats object early
-  private val strStatField: Regex =
-    """"([^"]+)":\["([^"]*)",(?:"([^"]*)"|null)\]""".r
 
   /** Truncation bound for string zone maps (chars). */
   val StrStatMaxLen: Int = 64
@@ -203,38 +177,6 @@ object TxLog {
     }
   private def truncHi(s: String): Option[String] =
     if (s.length <= StrStatMaxLen) Some(s) else None
-
-  /** Manifest string-value escaping: every char that could confuse the
-    * manifest's line-oriented regexes (quote, backslash, braces,
-    * brackets) and all control chars become JSON \\uXXXX escapes — all
-    * of which are valid JSON string escapes, so the manifest stays
-    * parseable by any strict JSON reader too. The DOT escapes as well:
-    * a quoted escStr'd value can then never end in the literal
-    * `.parquet`, so no metadata string (a txnId, a touched path, a
-    * column name) can impersonate a bare file entry to the entry regex.
-    */
-  private def escStr(s: String): String = s.flatMap {
-    case c @ ('"' | '\\' | '{' | '}' | '[' | ']' | '.') => f"\\u${c.toInt}%04x"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-  private val uEscField: Regex = """\\u([0-9a-fA-F]{4})""".r
-  private def unescStr(s: String): String =
-    uEscField.replaceAllIn(s, m => Regex.quoteReplacement(
-      Integer.parseInt(m.group(1), 16).toChar.toString))
-
-  private val schemaField: Regex = """"schemaB64":"([A-Za-z0-9+/=]*)"""".r
-
-  private def schemaToB64(s: org.apache.spark.sql.types.StructType): String =
-    java.util.Base64.getEncoder.encodeToString(
-      s.json.getBytes(StandardCharsets.UTF_8))
-
-  private def schemaOfLog(txt: String): Option[org.apache.spark.sql.types.StructType] =
-    schemaField.findFirstMatchIn(txt).map { m =>
-      org.apache.spark.sql.types.DataType.fromJson(new String(
-        java.util.Base64.getDecoder.decode(m.group(1)), StandardCharsets.UTF_8))
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-    }
 
   /** Value-preserving upcasts the parquet readers evaluate natively
     * (Spark 4 reads an int32 file column as LongType and a float column
@@ -344,165 +286,11 @@ object TxLog {
     }
   }
 
-  private def renderEntry(e: Entry): String =
-    if (e.bytes.isEmpty && e.stats.isEmpty && e.strStats.isEmpty &&
-      e.blooms.isEmpty && e.dvs.isEmpty && e.rows.isEmpty && e.dvRows == 0L)
-      "\"" + e.path + "\""
-    else {
-      val b = e.bytes.map(n => s""","b":$n""").getOrElse("")
-      val s = if (e.stats.isEmpty) "" else e.stats.toSeq.sortBy(_._1)
-        .map { case (c, (lo, hi)) => s""""$c":[$lo,$hi]""" }
-        .mkString(""","s":{""", ",", "}")
-      val t = if (e.strStats.isEmpty) "" else e.strStats.toSeq.sortBy(_._1)
-        .map { case (c, (lo, hi)) =>
-          val hiR = hi.map(h => "\"" + escStr(h) + "\"").getOrElse("null")
-          s""""${escStr(c)}":["${escStr(lo)}",$hiR]"""
-        }
-        .mkString(""","t":{""", ",", "}")
-      val m = if (e.blooms.isEmpty) "" else e.blooms.toSeq.sortBy(_._1)
-        .map { case (c, dt) => s""""${escStr(c)}":"${escStr(dt)}"""" }
-        .mkString(""","m":{""", ",", "}")
-      val d = if (e.dvs.isEmpty) "" else e.dvs
-        .map(r => "\"" + escStr(r) + "\"").mkString(""","d":[""", ",", "]")
-      val rc = e.rows.map(n => s""","r":$n""").getOrElse("")
-      val xc = if (e.dvRows == 0L) "" else s""","x":${e.dvRows}"""
-      s"""{"p":"${e.path}"$b$s$t$m$d$rc$xc}"""
-    }
-  private val actionField: Regex = """"action":"(append|overwrite|checkpoint)"""".r
-  private val txnField: Regex = """"txnId":"([^"]*)"""".r
-  // an overwrite manifest's row-level delta: "" = content-preserving
-  // rewrite (optimize/compact — the delta is EMPTY by construction), a
-  // dir name = change rows persisted under _change_data/<dir> (merge);
-  // absent = delta unknown (plain overwrite, restore, legacy manifests)
-  private val cdfField: Regex = """"cdf":"([^"]*)"""".r
-  // commit wall-clock, for TIMESTAMP AS OF / DESCRIBE HISTORY (absent in
-  // pre-round-9 manifests)
-  private val tsField: Regex = """"ts":(\d+)""".r
-  // the OPERATION that produced the commit (MERGE, OPTIMIZE, CLONE, ...)
-  // — DESCRIBE HISTORY's audit column; plain append/overwrite carry none
-  // and render as their action (Delta's operation field, ignorable by
-  // any reader so not fmt-gated)
-  private val opField: Regex = """"op":"([^"]*)"""".r
-  // hive-style partition spec of the commit's files (data lands under
-  // k=v dirs and the partition columns are NOT in the data files);
-  // absent/empty = unpartitioned
-  private val partitionByField: Regex = """"partitionBy":\[([^\]]*)\]""".r
-  private val partitionByItem: Regex = """"([^"]+)"""".r
-  private def partitionByOfLog(txt: String): Seq[String] =
-    partitionByDeclOf(txt).getOrElse(Nil)
-  // presence-aware: Some(Nil) = the commit EXPLICITLY declared a flat
-  // layout (partition evolution to unpartitioned), None = no declaration
-  // — the distinction keeps a blind statsless append from silently
-  // flipping a partitioned table's current spec
-  private def partitionByDeclOf(txt: String): Option[Seq[String]] =
-    partitionByField.findFirstMatchIn(txt)
-      .map(m => partitionByItem.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq)
-  // checkpoint-carried txnId→version map (exactly-once bookkeeping must
-  // survive checkpoint-bounded replay — and rewrites, so it never resets)
-  private val txnsField: Regex = """"txns":\{([^}]*)\}""".r
-  private val txnsEntry: Regex = """"([^"]+)":(\d+)""".r
-  // table CHECK constraints: name → base64(SQL expression). Add/drop
-  // commits and checkpoints write the FULL current map; replay keeps the
-  // most recent field seen (absent = no change, present-empty = reset
-  // after the last drop). Base64 because expressions contain exactly the
-  // characters the line-oriented manifest regexes key on.
-  private val constraintsField: Regex = """"constraints":\{([^}]*)\}""".r
-  private val constraintEntry: Regex = """"([^"]+)":"([A-Za-z0-9+/=]*)"""".r
-  private def constraintsOfLog(txt: String): Option[Map[String, String]] =
-    constraintsField.findFirstMatchIn(txt).map(m =>
-      constraintEntry.findAllMatchIn(m.group(1)).map(e =>
-        unescStr(e.group(1)) -> new String(
-          java.util.Base64.getDecoder.decode(e.group(2)),
-          StandardCharsets.UTF_8)).toMap)
-  // deletion-vector dir byte sizes, recorded by the commit that wrote
-  // the dir so the read path's broadcast-vs-shuffle decision is
-  // metadata-only (no LIST per dv dir per planning). Accumulative across
-  // manifests — dir names are uuid-unique, an overwrite never reuses one
-  // — and checkpoints persist the map restricted to live refs. Free
-  // metadata, NOT fmt-gated: an older reader falls back to walking.
-  private val dvbField: Regex = """"dvb":\{([^}]*)\}""".r
-  private val dvbEntry: Regex = """"([^"]+)":(\d+)""".r
-  private def dvbOfLog(txt: String): Map[String, Long] =
-    dvbField.findFirstMatchIn(txt).map(m =>
-      dvbEntry.findAllMatchIn(m.group(1)).map(e =>
-        unescStr(e.group(1)) -> e.group(2).toLong).toMap).getOrElse(Map.empty)
-  private def renderDvb(m: Map[String, Long]): String =
-    if (m.isEmpty) ""
-    else m.toSeq.sortBy(_._1).map { case (d, b) => s""""${escStr(d)}":$b""" }
-      .mkString(""","dvb":{""", ",", "}")
-
-  // COLUMN MAPPING (RENAME/DROP COLUMN): the recorded schema carries
-  // LOGICAL names; data files carry PHYSICAL names; `colmap` maps the
-  // non-identity pairs. Replay folds the fields: `colunmap` removals
-  // apply first, then `colmap` additions, and `coldrop` (retired
-  // physical names — a re-added logical column must get a FRESH
-  // physical, or old files' dropped data would resurface) unions.
-  // Checkpoints write the full folded state. Gated at fmt 5: a reader
-  // without the map would hand a renamed column's old bytes to the new
-  // logical name — wrong results, not degraded metadata.
-  private val colmapField: Regex = """"colmap":\{([^}]*)\}""".r
-  private val colmapEntry: Regex = """"([^"]+)":"([^"]*)"""".r
-  private val colunmapField: Regex = """"colunmap":\[([^\]]*)\]""".r
-  private val coldropField: Regex = """"coldrop":\[([^\]]*)\]""".r
-  private val quotedItem: Regex = """"([^"]*)"""".r
-  private def colmapOfLog(txt: String): Map[String, String] =
-    colmapField.findFirstMatchIn(txt).map(m =>
-      colmapEntry.findAllMatchIn(m.group(1)).map(e =>
-        unescStr(e.group(1)) -> unescStr(e.group(2))).toMap)
-      .getOrElse(Map.empty)
-  private def colunmapOfLog(txt: String): Set[String] =
-    colunmapField.findFirstMatchIn(txt).map(m =>
-      quotedItem.findAllMatchIn(m.group(1)).map(e => unescStr(e.group(1))).toSet)
-      .getOrElse(Set.empty)
-  private def coldropOfLog(txt: String): Set[String] =
-    coldropField.findFirstMatchIn(txt).map(m =>
-      quotedItem.findAllMatchIn(m.group(1)).map(e => unescStr(e.group(1))).toSet)
-      .getOrElse(Set.empty)
-  private def renderColmap(m: Map[String, String]): String =
-    if (m.isEmpty) ""
-    else m.toSeq.sortBy(_._1)
-      .map { case (l, p) => s""""${escStr(l)}":"${escStr(p)}"""" }
-      .mkString(""","colmap":{""", ",", "}")
-  private def renderStrList(field: String, s: Set[String]): String =
-    if (s.isEmpty) ""
-    else s.toSeq.sorted.map(x => "\"" + escStr(x) + "\"")
-      .mkString(s""","$field":[""", ",", "]")
-
   /** Fast-path hint that this table has (ever had) a column mapping —
     * same contract as the constraints marker: the LOG is the authority,
     * the marker only spares unmapped tables the per-commit replay.
     */
   private def colmapMarker(root: String): String = logPath(root, "_colmap")
-
-  // the table's declared CLUSTERING KEYS (liquid-clustering style):
-  // pure layout metadata recorded in the log so maintenance runs need no
-  // out-of-band configuration, replace-ruled like constraints (an
-  // explicit field replaces, checkpoints persist, present-empty resets).
-  // Changing the keys is a METADATA commit — no rewrite: old files keep
-  // their old-key zone maps (which keep pruning old-key predicates),
-  // and incremental compaction clusters new backlog by the new keys.
-  // Not fmt-gated: a reader ignoring it loses nothing but layout hints.
-  private val clusterField: Regex = """"cluster":\[([^\]]*)\]""".r
-  private def clusterOfLog(txt: String): Option[Seq[String]] =
-    clusterField.findFirstMatchIn(txt).map(m =>
-      quotedItem.findAllMatchIn(m.group(1)).map(e => unescStr(e.group(1))).toSeq)
-  private def renderSeqField(field: String, s: Seq[String]): String =
-    s.map(x => "\"" + escStr(x) + "\"").mkString(s""","$field":[""", ",", "]")
-
-  // the set of pre-existing files whose DV state a row-level commit
-  // changed — advisory metadata (not fmt-gated: ignoring it only costs
-  // rebase opportunities, never correctness) that lets a RACING
-  // row-level op on DISJOINT files fold instead of conflict
-  private val touchedField: Regex = """"touched":\[([^\]]*)\]""".r
-  private def touchedOfLog(txt: String): Option[Set[String]] =
-    touchedField.findFirstMatchIn(txt).map(m =>
-      quotedItem.findAllMatchIn(m.group(1)).map(e => unescStr(e.group(1))).toSet)
-
-  /** The path of a rendered manifest entry (bare string or object form). */
-  private def pathOfRendered(e: String): String =
-    entryField.findFirstMatchIn(e)
-      .map(m => Option(m.group(1)).getOrElse(m.group(2)))
-      .getOrElse(throw new IllegalStateException(s"txlog: unparseable entry $e"))
 
   /** Conflict-retry count across all read-modify-write ops — specs
     * assert a disjoint-file DV race commits in ONE attempt (fold, not
@@ -510,12 +298,6 @@ object TxLog {
     * ops.
     */
   private[io] val rmwConflicts = new AtomicLong(0L)
-
-  private def renderConstraints(m: Map[String, String]): String =
-    m.toSeq.sortBy(_._1).map { case (n, ex) =>
-      s""""${escStr(n)}":"${java.util.Base64.getEncoder
-        .encodeToString(ex.getBytes(StandardCharsets.UTF_8))}""""
-    }.mkString(""","constraints":{""", ",", "}")
 
   /** A checkpoint manifest (full live set) is written every K commits so
     * reader replay cost is O(K), not O(total versions) — the Delta
@@ -551,55 +333,32 @@ object TxLog {
   /** Resolve a manifest entry path against the table root. Entries are
     * root-relative (`data/txn-.../file.parquet`) except EXTERNAL entries
     * written by a shallow clone, which are absolute — plain-absolute or
-    * scheme-ful — and fmt-gated so a pre-clone reader never mis-resolves
-    * them against its own root.
+    * scheme-ful.
     */
   private[io] def absPath(root: String, p: String): String =
     if (p.startsWith("/") || p.contains("://") || p.startsWith("file:")) p
     else s"$root/$p"
 
-  /** Highest manifest format this reader understands. Manifests carry
-    * `"fmt":N`; a HIGHER N means a future writer used features this
-    * reader would silently misparse — refuse loudly instead (Delta's
-    * protocol-version action). Absent fmt (pre-round-8 logs) reads as 1.
-    *
-    * The fmt each manifest WRITES is feature-gated (Delta's
-    * minReaderVersion): 4 only when the manifest carries bloom-index
-    * declarations or external (absolute-path) entries — a v3 reader
-    * would drop a "m"-bearing entry's stats and mis-resolve an external
-    * path against its own root; 3 only when it carries string zone maps
-    * or a partition layout — a v2 reader's entry regex would silently
-    * DROP a "t"-bearing entry from the live set, and would read a
-    * partitioned table without its partition column — otherwise 2, so
-    * plain commits stay readable by older readers. 5 only when the
-    * manifest carries COLUMN-MAPPING state (colmap/colunmap/coldrop): a
-    * v4 reader would hand a renamed column's old physical bytes to the
-    * wrong logical name.
+  /** The log format: one stamp, `"fmt":6`, on every file this writer
+    * writes (see [[TxLogManifest]] for the encoding). A reader refuses
+    * any file stamped HIGHER than the format it knows — a future writer
+    * may use features it would silently misparse (Delta's
+    * protocol-version action) — and reads every older stamp: fmt 2–5
+    * files and the unstamped files of pre-round-8 logs (read as 1) all
+    * decode through the same JSON codec. The stamp moved to 6 with that
+    * codec because its escaping differs from what the fmt ≤ 5 readers
+    * assumed (a raw `}` inside a string zone map would end their entry
+    * match early and silently drop the file), so those readers must
+    * refuse what it writes.
     */
-  val FormatVersion: Long = 5L
-  // NOT fmt-gated: "r" (per-file row count) — an older reader's entry
-  // regex degrades an "r"-bearing object entry to its bare path, losing
-  // stats/size for that entry but never a file or a row (rowCount simply
-  // doesn't exist below v4); "x" (deleted-row count) only ever co-occurs
-  // with the gated "d". Correctness-bearing fields gate; free metadata
-  // doesn't condemn plain tables to a version bump.
-  private def manifestFmt(entries: Seq[String], partitionBy: Seq[String]): Long =
-    if (entries.exists(e => e.contains("\"m\":{") || e.contains("\"p\":\"/") ||
-      e.contains("\"d\":["))) 4L
-    else if (partitionBy.nonEmpty || entries.exists(_.contains("\"t\":{"))) 3L
-    else 2L
-  private val fmtField: Regex = """"fmt":(\d+)""".r
+  val FormatVersion: Long = 6L
 
-  private def readLogFile(root: String, name: String): String = {
+  private def readLog(root: String, name: String): TxLogManifest = {
     manifestReads.incrementAndGet()
-    val txt = store(root).readText(logPath(root, name))
-    fmtField.findFirstMatchIn(txt).map(_.group(1).toLong).foreach { f =>
-      if (f > FormatVersion)
-        throw new java.io.IOException(
-          s"txlog: $name uses format v$f but this reader supports ≤ v$FormatVersion — upgrade before reading")
-    }
-    txt
+    TxLogManifest.decode(name, store(root).readText(logPath(root, name)))
   }
+  private def readVersion(root: String, v: Long): TxLogManifest =
+    readLog(root, f"v$v%08d.json")
 
   /** All committed versions, ascending (empty for a fresh table).
     * Versions are DENSE by construction — every claim links head+1 — so
@@ -653,43 +412,6 @@ object TxLog {
     try store(root).putReplace(logPath(root, "_head"),
       v.toString.getBytes(StandardCharsets.UTF_8))
     catch { case scala.util.control.NonFatal(_) => () }
-
-  /** Entries of one log file. */
-  private def parseEntries(txt: String): Seq[Entry] =
-    entryField.findAllMatchIn(txt).map { m =>
-      if (m.group(1) != null) Entry(m.group(1), None, Map.empty)
-      else Entry(
-        m.group(2),
-        Option(m.group(3)).map(_.toLong),
-        Option(m.group(4)).map(s => colStatField.findAllMatchIn(s)
-          .map(c => c.group(1) -> (c.group(2).toLong, c.group(3).toLong)).toMap)
-          .getOrElse(Map.empty),
-        Option(m.group(5)).map(s => strStatField.findAllMatchIn(s)
-          .map(c => unescStr(c.group(1)) ->
-            (unescStr(c.group(2)), Option(c.group(3)).map(unescStr))).toMap)
-          .getOrElse(Map.empty),
-        Option(m.group(6)).map(s => bloomColField.findAllMatchIn(s)
-          .map(c => unescStr(c.group(1)) -> unescStr(c.group(2))).toMap)
-          .getOrElse(Map.empty),
-        Option(m.group(7)).map(s => dvRefField.findAllMatchIn(s)
-          .map(c => unescStr(c.group(1))).toVector)
-          .getOrElse(Vector.empty),
-        Option(m.group(8)).map(_.toLong),
-        Option(m.group(9)).map(_.toLong).getOrElse(0L))
-    }.toSeq
-
-  private def readManifest(root: String, v: Long): Manifest = {
-    val txt = readLogFile(root, f"v$v%08d.json")
-    val action = actionField.findFirstMatchIn(txt)
-      .map(_.group(1))
-      .getOrElse(throw new java.io.IOException(s"txlog: bad manifest v$v"))
-    val es = parseEntries(txt)
-    Manifest(v, action, es.map(_.path),
-      cdfField.findFirstMatchIn(txt).map(_.group(1)),
-      tsField.findFirstMatchIn(txt).map(_.group(1).toLong),
-      es.iterator.flatMap(_.dvs).toSet,
-      opField.findFirstMatchIn(txt).map(_.group(1)))
-  }
 
   /** Newest checkpoint ≤ `upTo`, probed by existence: checkpoints land
     * only at multiples of [[CheckpointEvery]], so walking the multiples
@@ -748,62 +470,52 @@ object TxLog {
       if (isOverwrite || liveWasEmpty) partitionBy = Some(decl.getOrElse(Nil))
       else if (hasEntries && decl.isDefined) partitionBy = decl
     base.foreach { cv =>
-      val txt = readLogFile(root, f"c$cv%08d.json")
-      entries = parseEntries(txt).toVector
-      partitionBy = Some(partitionByOfLog(txt))
-      schema = schemaOfLog(txt)
+      val c = readLog(root, f"c$cv%08d.json")
+      entries = c.files.toVector
+      partitionBy = Some(c.partitionBy.getOrElse(Nil))
+      schema = c.schema
       // a checkpoint is full state: an absent field means NO constraints
       // (every checkpoint written since constraints exist records them)
-      constraints = constraintsOfLog(txt).getOrElse(Map.empty)
-      dvBytes = dvbOfLog(txt)
-      colMap = colmapOfLog(txt)
-      droppedPhys = coldropOfLog(txt)
-      clusterBy = clusterOfLog(txt).getOrElse(Nil)
-      txns = txnsField.findFirstMatchIn(txt).map(m =>
-        txnsEntry.findAllMatchIn(m.group(1))
-          .map(e => unescStr(e.group(1)) -> e.group(2).toLong).toMap).getOrElse {
-        // a pre-fmt-2 checkpoint carries no txns map: absent there means
-        // UNKNOWN, not empty — replaying from it would silently forget
-        // every txnId committed at or below it, and a recovered streaming
-        // sink's appendOnce could double-land a microbatch. Reconstruct
-        // once from the pre-checkpoint manifests (the pre-round-8 cost,
-        // paid only on legacy chains; the next checkpoint write records
-        // the map and retires this path). A fmt-2 checkpoint omits the
-        // field only when the map is genuinely empty.
-        val legacy = fmtField.findFirstMatchIn(txt)
-          .map(_.group(1).toLong).getOrElse(1L) < 2L
-        if (!legacy) Map.empty[String, Long]
-        else versions(root).filter(_ <= cv).flatMap { v =>
-          val vtxt = readLogFile(root, f"v$v%08d.json")
-          txnField.findFirstMatchIn(vtxt).map(m => unescStr(m.group(1)) -> v)
-        }.toMap
-      }
+      constraints = c.constraints.getOrElse(Map.empty)
+      dvBytes = c.dvb
+      colMap = c.colmap
+      droppedPhys = c.coldrop
+      clusterBy = c.cluster.getOrElse(Nil)
+      // a pre-fmt-2 checkpoint carries no txns map: absent there means
+      // UNKNOWN, not empty — replaying from it would silently forget
+      // every txnId committed at or below it, and a recovered streaming
+      // sink's appendOnce could double-land a microbatch. Reconstruct
+      // once from the pre-checkpoint manifests (the pre-round-8 cost,
+      // paid only on legacy chains; the next checkpoint write records
+      // the map and retires this path). A fmt-2+ checkpoint omits the
+      // field only when the map is genuinely empty.
+      txns =
+        if (c.txns.nonEmpty || c.fmt >= 2L) c.txns
+        else versions(root).filter(_ <= cv)
+          .flatMap(v => readVersion(root, v).txnId.map(_ -> v)).toMap
     }
     versions(root)
       .filter(v => v <= upTo && v > base.getOrElse(0L))
       .foreach { v =>
-        val txt = readLogFile(root, f"v$v%08d.json")
-        val action = actionField.findFirstMatchIn(txt).map(_.group(1))
-          .getOrElse(throw new java.io.IOException(s"txlog: bad manifest v$v"))
-        val es = parseEntries(txt)
-        foldPartitionBy(partitionByDeclOf(txt), action == Overwrite.name,
-          es.nonEmpty, entries.isEmpty)
-        if (action == Overwrite.name) {
-          entries = es.toVector
-          schema = schemaOfLog(txt)
+        val m = readVersion(root, v)
+        val isOverwrite = m.action == Overwrite.name
+        foldPartitionBy(m.partitionBy, isOverwrite, m.files.nonEmpty,
+          entries.isEmpty)
+        if (isOverwrite) {
+          entries = m.files.toVector
+          schema = m.schema
         } else {
-          entries = entries ++ es
-          schema = mergeSchemas(schema, schemaOfLog(txt))
+          entries = entries ++ m.files
+          schema = mergeSchemas(schema, m.schema)
         }
         // exactly-once bookkeeping is monotone: a rewrite must NOT reset
         // it, or a replayed microbatch could double-land after an OPTIMIZE
-        txnField.findFirstMatchIn(txt).foreach(m =>
-          txns += (unescStr(m.group(1)) -> v))
-        constraintsOfLog(txt).foreach(m => constraints = m)
-        dvBytes ++= dvbOfLog(txt)
-        colMap = (colMap -- colunmapOfLog(txt)) ++ colmapOfLog(txt)
-        droppedPhys ++= coldropOfLog(txt)
-        clusterOfLog(txt).foreach(c => clusterBy = c)
+        m.txnId.foreach(t => txns += (t -> v))
+        m.constraints.foreach(c => constraints = c)
+        dvBytes ++= m.dvb
+        colMap = (colMap -- m.colunmap) ++ m.colmap
+        droppedPhys ++= m.coldrop
+        m.cluster.foreach(c => clusterBy = c)
       }
     Replay(entries, schema.filter(_.fields.nonEmpty), txns, partitionBy,
       constraints, dvBytes, colMap, droppedPhys, clusterBy)
@@ -1244,9 +956,9 @@ object TxLog {
     val bloomTypes: BloomCols = bloomCols.toSeq
       .filter { case (c, _) => byName.contains(c) }
       .map { case (c, _) => phys(c) -> byName(c).catalogString }.toMap
-    val entries: Seq[String] =
-      carry.map(renderEntry) ++ written.map(p =>
-        renderEntry(Entry(p, writtenSizes.get(p),
+    val entries: Seq[Entry] =
+      carry ++ written.map(p =>
+        Entry(p, writtenSizes.get(p),
           fileStats.getOrElse(p, Map.empty),
           fileStrStats.getOrElse(p, Map.empty),
           // a file the stats job never saw (a zero-row part file) gets
@@ -1256,7 +968,7 @@ object TxLog {
           // part file: its count is exactly 0, not unknown (the footer
           // path counts every file directly)
           rows = fileRows.get(p)
-            .orElse(if (written.nonEmpty) Some(0L) else None))))
+            .orElse(if (written.nonEmpty) Some(0L) else None)))
     // record the commit's schema so readers resolve theirs from the
     // LOG, never from O(live files) footer reads; a carry-bearing
     // commit must cover the carried files' columns too, so it merges
@@ -1307,7 +1019,7 @@ object TxLog {
     */
   private def publish(
       root: String,
-      entries: Seq[String],
+      entries: Seq[Entry],
       action: Action,
       txnId: Option[String],
       recorded: Option[org.apache.spark.sql.types.StructType],
@@ -1348,16 +1060,15 @@ object TxLog {
         if (next - 1 > consScanned) {
           var latest: Option[Map[String, String]] = None
           ((consScanned + 1) to (next - 1)).foreach { v =>
-            val txt = readLogFile(root, f"v$v%08d.json")
-            constraintsOfLog(txt).foreach(m => latest = Some(m))
+            val m = readVersion(root, v)
+            m.constraints.foreach(c => latest = Some(c))
             // a COLUMN-MAPPING change in the window invalidates the
             // physical names this commit's files were written under —
             // conflict loudly (a read-modify-write caller retries with
             // the new mapping; a plain append surfaces the error and its
             // files are vacuumable residue) rather than letting replay
             // merge the old logical name back in over retired bytes
-            if (colmapOfLog(txt).nonEmpty || colunmapOfLog(txt).nonEmpty ||
-              coldropOfLog(txt).nonEmpty)
+            if (m.colmap.nonEmpty || m.colunmap.nonEmpty || m.coldrop.nonEmpty)
               throw new CommitConflict(
                 s"txlog: the column mapping changed at v$v inside this " +
                   "commit's write window — retry the commit against the " +
@@ -1379,36 +1090,30 @@ object TxLog {
           // DV-mode folding works at ENTRY granularity (path-keyed), so
           // a racing row-level op on disjoint files can hand over its
           // entries' dv state without conflicting
-          lazy val entryMap: scala.collection.mutable.LinkedHashMap[String, String] = {
-            val m = scala.collection.mutable.LinkedHashMap.empty[String, String]
-            curEntries.foreach(e => m(pathOfRendered(e)) = e)
-            m
-          }
+          lazy val entryMap: scala.collection.mutable.LinkedHashMap[String, Entry] =
+            scala.collection.mutable.LinkedHashMap.from(curEntries.map(e => e.path -> e))
           var usedMap = false
           (h + 1 to next - 1).foreach { v =>
-            val txt = readLogFile(root, f"v$v%08d.json")
-            val act = actionField.findFirstMatchIn(txt).map(_.group(1))
-            if (partitionByOfLog(txt) != partitionBy)
+            val m = readVersion(root, v)
+            if (m.partitionBy.getOrElse(Nil) != partitionBy)
               throw new CommitConflict(
                 s"txlog: based on v$h but v$v declares a different layout")
-            if (act.contains(Append.name)) {
+            if (m.action == Append.name) {
               // fold by reference: the append's entries (stats, blooms,
-              // sizes — a parse→render round trip preserves every
-              // field) and its recorded schema, merged exactly as
+              // sizes) and its recorded schema, merged exactly as
               // replay would have merged them. For a row-level op this
               // is write-serializable reordering too: the op serializes
               // FIRST, the blind append after it (its rows are not
               // subject to the op's predicate — Delta's semantics)
-              if (rebaseDvTouched.isEmpty)
-                curEntries = curEntries ++ parseEntries(txt).map(renderEntry)
+              if (rebaseDvTouched.isEmpty) curEntries = curEntries ++ m.files
               else {
                 usedMap = true
-                parseEntries(txt).foreach(e => entryMap(e.path) = renderEntry(e))
+                m.files.foreach(e => entryMap(e.path) = e)
               }
-              curRecorded = mergeSchemas(curRecorded, schemaOfLog(txt))
-              curDvb ++= dvbOfLog(txt)
-            } else if (rebaseDvTouched.nonEmpty && act.contains(Overwrite.name) &&
-              touchedOfLog(txt).exists(_.intersect(rebaseDvTouched.get).isEmpty)) {
+              curRecorded = mergeSchemas(curRecorded, m.schema)
+              curDvb ++= m.dvb
+            } else if (rebaseDvTouched.nonEmpty && m.action == Overwrite.name &&
+              m.touched.nonEmpty && m.touched.intersect(rebaseDvTouched.get).isEmpty) {
               // a racing row-level op that touched DISJOINT files: adopt
               // its entry state for exactly the files IT touched, plus
               // any file it added (MoR post-images) — equivalent to
@@ -1417,57 +1122,31 @@ object TxLog {
               // overlapping touched set (or any commit without a touched
               // declaration) still conflicts and the caller re-reads.
               usedMap = true
-              val theirT = touchedOfLog(txt).get
-              parseEntries(txt).foreach { e =>
-                if (theirT.contains(e.path) || !entryMap.contains(e.path))
-                  entryMap(e.path) = renderEntry(e)
+              m.files.foreach { e =>
+                if (m.touched.contains(e.path) || !entryMap.contains(e.path))
+                  entryMap(e.path) = e
               }
-              curRecorded = mergeSchemas(curRecorded, schemaOfLog(txt))
-              curDvb ++= dvbOfLog(txt)
+              curRecorded = mergeSchemas(curRecorded, m.schema)
+              curDvb ++= m.dvb
             } else throw new CommitConflict(
-              s"txlog: based on v$h but v$v is not foldable " +
-                s"(${act.getOrElse("?")}${touchedOfLog(txt).map(t => s", touched=${t.size}").getOrElse("")})")
+              s"txlog: based on v$h but v$v is not foldable (${m.action}" +
+                s"${if (m.touched.isEmpty) "" else s", touched=${m.touched.size}"})")
           }
           if (usedMap) curEntries = entryMap.values.toSeq
           curBase = Some(next - 1)
         }
       }
-      // escaped like every other user-supplied string: a quote or
-      // backslash in a caller's txnId (streaming txnPrefix flows here
-      // verbatim) must not be able to corrupt the manifest line
-      val txnPart = txnId.map(t => s""","txnId":"${escStr(t)}"""").getOrElse("")
-      val opPart = op.map(o => s""","op":"${escStr(o)}"""").getOrElse("")
-      val cdfPart = cdf.map(d => s""","cdf":"$d"""").getOrElse("")
-      val partPart =
-        if (partitionBy.nonEmpty)
-          partitionBy.map(c => "\"" + c + "\"")
-            .mkString(""","partitionBy":[""", ",", "]")
+      val body = TxLogManifest.encode(TxLogManifest(next, action.name,
+        curEntries, ts = Some(System.currentTimeMillis()), txnId = txnId,
+        op = op, cdf = cdf,
         // an EXPLICIT evolution to a flat layout declares the empty spec
         // (present-empty ≠ absent: replay's fold only moves the current
         // spec on a declaration)
-        else if (declareFlatLayout) ""","partitionBy":[]"""
-        else ""
-      val schemaPart = curRecorded
-        .map(s => s""","schemaB64":"${schemaToB64(s)}"""").getOrElse("")
-      val consPart = constraints.map(renderConstraints).getOrElse("")
-      val dvbPart = renderDvb(curDvb)
-      val touchedPart = renderStrList("touched", touched)
-      val clusterPart = cluster.map(renderSeqField("cluster", _)).getOrElse("")
-      val mapPart = renderColmap(colMapAdd) +
-        renderStrList("colunmap", colUnmap) +
-        renderStrList("coldrop", colDrop)
-      // constraints-bearing manifests are fmt 4: an older writer's
-      // checkpoint would silently DROP the field (derived state), losing
-      // enforcement for every later reader; column-mapping state gates 5,
-      // and so does a txnId that ESCAPES differently than it reads — an
-      // older reader would store the escaped bytes and fail the
-      // exactly-once lookup, double-landing a replayed microbatch
-      val fmt = math.max(manifestFmt(curEntries, partitionBy),
-        math.max(if (consPart.nonEmpty) 4L else 0L,
-          math.max(if (mapPart.nonEmpty) 5L else 0L,
-            if (txnId.exists(t => escStr(t) != t)) 5L else 0L)))
-      val body = curEntries.mkString(
-        s"""{"version":$next,"fmt":$fmt,"ts":${System.currentTimeMillis()},"action":"${action.name}"$txnPart$opPart$cdfPart$partPart$schemaPart$consPart$dvbPart$touchedPart$clusterPart$mapPart,"files":[""", ",", "]}")
+        partitionBy =
+          if (partitionBy.nonEmpty || declareFlatLayout) Some(partitionBy) else None,
+        schema = curRecorded, constraints = constraints, dvb = curDvb,
+        touched = touched, cluster = cluster, colmap = colMapAdd,
+        colunmap = colUnmap, coldrop = colDrop))
       // the atomic claim: complete durable bytes at vN or nothing — the
       // store's contract (hard link locally, exclusive rename on HDFS)
       if (store(root).putIfAbsent(logPath(root, f"v$next%08d.json"),
@@ -1518,7 +1197,7 @@ object TxLog {
     // physical bytes (silent column collision). The conflict retry
     // recomputes cur.colMap per attempt, like rename/drop.
     readModifyWrite(root, "restore") { (head, cur) =>
-      publish(root, r.entries.map(renderEntry), Overwrite, txnId = None,
+      publish(root, r.entries, Overwrite, txnId = None,
         recorded = r.schema, expectHead = Some(head),
         txn = java.util.UUID.randomUUID().toString.take(12),
         partitionBy = r.partitionBy.getOrElse(Nil), op = Some("RESTORE"),
@@ -1530,8 +1209,8 @@ object TxLog {
   /** Shallow CLONE: a metadata-only fork of `srcRoot`'s snapshot at
     * `version` (head when None) into `dstRoot` — ONE manifest write
     * whose entries reference the source's files by ABSOLUTE path
-    * (external entries, fmt-gated to 4), carrying their sizes, zone
-    * maps, string stats, and bloom declarations, plus the recorded
+    * (external entries), carrying their sizes, zone maps, string
+    * stats, and bloom declarations, plus the recorded
     * schema and partition layout. At 100 TB a dev/test fork costs
     * kilobytes of metadata and zero data movement — Delta's SHALLOW
     * CLONE, Iceberg's snapshot-ref idea. Data files are immutable, so
@@ -1581,7 +1260,7 @@ object TxLog {
     // the source's dv-byte ledger rides along, keyed by the absolutized
     // refs the clone's entries now carry
     val extDvb = r.dvBytes.map { case (d, b) => absPath(srcAbs, d) -> b }
-    publish(dstRoot, ext.map(renderEntry), Overwrite, txnId = None,
+    publish(dstRoot, ext, Overwrite, txnId = None,
       recorded = r.schema, expectHead = None,
       txn = java.util.UUID.randomUUID().toString.take(12),
       partitionBy = layoutOf(srcRoot, r), op = Some("CLONE"), dvb = extDvb,
@@ -1644,7 +1323,7 @@ object TxLog {
       store(root).mkdirs(logDir(root))
       try store(root).createMarker(constraintsMarker(root))
       catch { case scala.util.control.NonFatal(_) => () } // already hinted: fine
-      publish(root, r.entries.map(renderEntry), Overwrite, txnId = None,
+      publish(root, r.entries, Overwrite, txnId = None,
         recorded = r.schema, expectHead = Some(base),
         txn = java.util.UUID.randomUUID().toString.take(12),
         cdf = Some(""), partitionBy = layoutOf(root, r),
@@ -1661,7 +1340,7 @@ object TxLog {
     readModifyWrite(root, "dropConstraint") { (base, r) =>
       require(r.constraints.contains(name),
         s"txlog: no constraint $name on $root")
-      publish(root, r.entries.map(renderEntry), Overwrite, txnId = None,
+      publish(root, r.entries, Overwrite, txnId = None,
         recorded = r.schema, expectHead = Some(base),
         txn = java.util.UUID.randomUUID().toString.take(12),
         cdf = Some(""), partitionBy = layoutOf(root, r),
@@ -1724,7 +1403,7 @@ object TxLog {
       val newCluster =
         if (!r.clusterBy.contains(oldName)) None
         else Some(r.clusterBy.map(c => if (c == oldName) newName else c))
-      publish(root, r.entries.map(renderEntry), Overwrite, txnId = None,
+      publish(root, r.entries, Overwrite, txnId = None,
         recorded = Some(newSchema), expectHead = Some(base),
         txn = java.util.UUID.randomUUID().toString.take(12),
         cdf = Some(""), partitionBy = newLayout, op = Some("RENAME COLUMN"),
@@ -1762,7 +1441,7 @@ object TxLog {
       store(root).mkdirs(logDir(root))
       try store(root).createMarker(colmapMarker(root))
       catch { case scala.util.control.NonFatal(_) => () } // already hinted: fine
-      publish(root, r.entries.map(renderEntry), Overwrite, txnId = None,
+      publish(root, r.entries, Overwrite, txnId = None,
         recorded = Some(newSchema), expectHead = Some(base),
         txn = java.util.UUID.randomUUID().toString.take(12),
         cdf = Some(""), partitionBy = layout, op = Some("DROP COLUMN"),
@@ -1784,39 +1463,16 @@ object TxLog {
       // them from — so an evolved table's replay stays checkpoint-bounded
       // instead of replaying an ever-growing manifest suffix
       // (TxLogPartitionSpec's mixed-layout case proves the bound)
-      val partCols = r.partitionBy.getOrElse(Nil)
-      val partPart =
-        if (partCols.isEmpty) ""
-        else partCols.map(c => "\"" + c + "\"")
-          .mkString(""","partitionBy":[""", ",", "]")
-      val schemaPart = r.schema
-        .map(s => s""","schemaB64":"${schemaToB64(s)}"""").getOrElse("")
-      val txnsPart =
-        if (r.txns.isEmpty) ""
-        else r.txns.toSeq.sortBy(_._2)
-          .map { case (t, tv) => s""""${escStr(t)}":$tv""" }
-          .mkString(""","txns":{""", ",", "}")
-      val consPart =
-        if (r.constraints.isEmpty) "" else renderConstraints(r.constraints)
       // the dv-byte ledger survives checkpoint-bounded replay, pruned to
-      // the refs the live set still subtracts
-      val dvbPart = {
-        val live = r.entries.iterator.flatMap(_.dvs).toSet
-        renderDvb(r.dvBytes.filter { case (d, _) => live(d) })
-      }
-      // full folded column-mapping state (replay-from-checkpoint resets)
-      val mapPart = renderColmap(r.colMap) +
-        renderStrList("coldrop", r.droppedPhys)
-      val clusterPart =
-        if (r.clusterBy.isEmpty) ""
-        else renderSeqField("cluster", r.clusterBy)
-      val rendered = r.entries.map(renderEntry)
-      val fmt = math.max(manifestFmt(rendered, partCols),
-        math.max(if (consPart.nonEmpty) 4L else 0L,
-          math.max(if (mapPart.nonEmpty) 5L else 0L,
-            if (r.txns.keys.exists(t => escStr(t) != t)) 5L else 0L)))
-      val body = rendered
-        .mkString(s"""{"version":$v,"fmt":$fmt,"action":"checkpoint"$partPart$schemaPart$txnsPart$consPart$dvbPart$mapPart$clusterPart,"files":[""", ",", "]}")
+      // the refs the live set still subtracts; the column mapping is the
+      // full folded state (replay-from-checkpoint resets it)
+      val liveDvs = r.entries.iterator.flatMap(_.dvs).toSet
+      val body = TxLogManifest.encode(TxLogManifest(v, "checkpoint", r.entries,
+        partitionBy = r.partitionBy.filter(_.nonEmpty), schema = r.schema,
+        txns = r.txns, constraints = Some(r.constraints).filter(_.nonEmpty),
+        dvb = r.dvBytes.filter { case (d, _) => liveDvs(d) },
+        colmap = r.colMap, coldrop = r.droppedPhys,
+        cluster = Some(r.clusterBy).filter(_.nonEmpty)))
       store(root).putIfAbsent(logPath(root, f"c$v%08d.json"),
         body.getBytes(StandardCharsets.UTF_8)) // concurrent winner: fine
       ()
@@ -2325,7 +1981,7 @@ object TxLog {
           // size the broadcast-vs-shuffle decision from the log alone
           val dvSize = store(root).walk(s"$root/$dvDir").iterator
             .map(_.size).sum
-          publish(root, entries.map(renderEntry), Overwrite, txnId = None,
+          publish(root, entries, Overwrite, txnId = None,
             recorded = r.schema, expectHead = Some(base),
             txn = java.util.UUID.randomUUID().toString.take(12),
             cdf = Some(cdfDir), partitionBy = layoutOf(root, r),
@@ -2650,7 +2306,7 @@ object TxLog {
     require(cols.size == 2,
       s"txlog: clustering is 2-D (Morton curve) — got ${cols.size} keys")
     readModifyWrite(root, "setClusterKeys") { (base, r) =>
-      publish(root, r.entries.map(renderEntry), Overwrite, txnId = None,
+      publish(root, r.entries, Overwrite, txnId = None,
         recorded = r.schema, expectHead = Some(base),
         txn = java.util.UUID.randomUUID().toString.take(12),
         cdf = Some(""), partitionBy = layoutOf(root, r),
@@ -2924,11 +2580,10 @@ object TxLog {
     require(to <= head, s"txlog: changes upper bound v$to exceeds head v$head")
     import scala.jdk.CollectionConverters._
     val perVersion: Seq[(Long, Seq[String])] = ((from + 1) to to).flatMap { v =>
-      val txt = readLogFile(root, f"v$v%08d.json")
-      val action = actionField.findFirstMatchIn(txt).map(_.group(1))
-        .getOrElse(throw new java.io.IOException(s"txlog: bad manifest v$v"))
-      if (action == Append.name) Some(v -> parseEntries(txt).map(_.path))
-      else (cdfField.findFirstMatchIn(txt).map(_.group(1)), skipRewrites) match {
+      val m = readVersion(root, v)
+      val action = m.action
+      if (action == Append.name) Some(v -> m.files.map(_.path))
+      else (m.cdf, skipRewrites) match {
         case (Some(""), _) => None // content-preserving rewrite: empty delta
         case (_, true)     => None // subscriber opted out of rewrite effects
         case (Some(dir), _) if withChangeType =>
@@ -3016,8 +2671,8 @@ object TxLog {
   def history(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     versions(root).map { v =>
-      val m = readManifest(root, v)
-      (m.version, m.action, m.op.getOrElse(m.action.toUpperCase),
+      val m = readVersion(root, v)
+      (v, m.action, m.op.getOrElse(m.action.toUpperCase),
         m.files.size.toLong, m.ts.getOrElse(0L))
     }.toDF("version", "action", "operation", "n_files", "commit_ts")
   }
@@ -3059,7 +2714,7 @@ object TxLog {
   def versionAsOf(root: String, tsMillis: Long): Long = {
     val head = headVersion(root)
     require(head >= 1, s"txlog: $root has no committed version yet")
-    def ts(v: Long): Long = readManifest(root, v).ts.getOrElse(0L)
+    def ts(v: Long): Long = readVersion(root, v).ts.getOrElse(0L)
     require(ts(1L) <= tsMillis,
       s"txlog: no version of $root exists at or before timestamp $tsMillis")
     var lo = 1L; var hi = head
@@ -3142,16 +2797,16 @@ object TxLog {
     var keep: Set[String] = cur
     // change-data dirs any retained changes() read can still reference
     var keepCdf: Set[String] =
-      if (horizon >= 1) readManifest(root, horizon).cdf.toSet - "" else Set.empty
+      if (horizon >= 1) readVersion(root, horizon).cdf.toSet - "" else Set.empty
     // deletion-vector dirs any retained snapshot still subtracts
     var keepDv: Set[String] = horizonReplay.entries.iterator.flatMap(_.dvs).toSet
     def roll(fromV: Long, toV: Long): Unit = (fromV to toV).foreach { v =>
-      val m = readManifest(root, v)
-      val fs = m.files.map(f => absPath(root, f)).toSet
+      val m = readVersion(root, v)
+      val fs = m.files.map(e => absPath(root, e.path)).toSet
       cur = if (m.action == Overwrite.name) fs else cur ++ fs
       keep ++= cur
       keepCdf ++= m.cdf.toSet - ""
-      keepDv ++= m.dvRefs
+      keepDv ++= m.files.iterator.flatMap(_.dvs)
     }
     var upper = vs.last
     roll(horizon + 1, upper)

@@ -5,7 +5,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference,
-  CommonExpressionRef, Expression, RuntimeReplaceable, With}
+  CommonExpressionRef, Expression, RuntimeReplaceable, SubqueryExpression, With}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -57,11 +57,13 @@ final class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperators {
     case DeleteFromTable(GraftTarget(root), cond) if cond.resolved =>
+      refuseSubqueries("DELETE", Seq(cond))
       GraftDeleteCommand(root, renderSql(cond))
 
     case UpdateTable(GraftTarget(root), assignments, cond)
         if assignments.forall(a => a.key.resolved && a.value.resolved) &&
           cond.forall(_.resolved) =>
+      refuseSubqueries("UPDATE", cond.toSeq ++ assignments.map(_.value))
       val set = assignments.map { a =>
         val name = a.key match {
           case ar: AttributeReference => ar.name
@@ -133,6 +135,14 @@ final class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
       case _ => None
     }
   }
+
+  /** Conditions and SET values travel to the row-level APIs as SQL text,
+    * and a rendered subquery does not parse back there.
+    */
+  private def refuseSubqueries(stmt: String, es: Seq[Expression]): Unit =
+    if (es.exists(SubqueryExpression.hasSubquery))
+      fail(s"$stmt on a graft table does not support subqueries in its " +
+        "condition or SET values")
 
   private def fail(msg: String): Nothing =
     throw new UnsupportedOperationException(s"graft DML: $msg")

@@ -47,6 +47,30 @@ class TxLogCloneSpec extends AnyFunSuite {
     assert(miss.count() === 0L)
   }
 
+  test("clone of a root holding a quote and a backslash reads back the source exactly") {
+    // the clone's entries carry the source root inside every path, so
+    // the root's characters must survive the manifest's string encoding.
+    // The source's log is root-relative, so the table is built at a
+    // plain path and moved under the quoted name (a commit INTO a root
+    // with a backslash fails in Spark's glob of the written dir).
+    val src = s"${Zones.tempDir("txclone_q")}/src\"q\\r"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src).getParent)
+    java.nio.file.Files.move(java.nio.file.Paths.get(sourceTable()),
+      java.nio.file.Paths.get(src))
+    val dst = Zones.tempDir("txclone_qdst")
+    TxLog.cloneTable(src, dst)
+    val a = TxLog.snapshot(spark, src).orderBy("id").collect()
+    val b = TxLog.snapshot(spark, dst).orderBy("id").collect()
+    assert(a.toSeq === b.toSeq)
+    assert(TxLog.rowCount(src) === Some(2000L))
+    assert(TxLog.rowCount(dst) === TxLog.rowCount(src))
+    // the carried zone maps still prune (file 2 = ids [1000, 1499])
+    val q = TxLog.snapshot(spark, dst).filter(col("id").between(1100L, 1200L))
+    assert(q.count() === 101L)
+    assert(TxLogFileIndex.of(q).lastListed.size === 1,
+      "the clone's entries lost their zone maps")
+  }
+
   test("clone of an old version is that version, not the head") {
     val src = sourceTable() // 4 commits
     val dst = Zones.tempDir("txclone_v2")

@@ -189,6 +189,28 @@ class GraftDataSourceSpec extends AnyFunSuite {
     } finally s2.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
+  test("SQL DELETE / UPDATE with a subquery is refused by name; the table is unchanged") {
+    val root = Zones.tempDir("dssubq")
+    TxLog.commit(spark, root, batch(0, 10).coalesce(1), TxLog.Append,
+      statsCols = Seq("id"))
+    val s2 = GraftSession.withDml(spark)
+    val tbl = s"graft_subq_${java.util.UUID.randomUUID().toString.take(8).replace("-", "")}"
+    s2.sql(s"CREATE TABLE $tbl USING graft LOCATION '$root'")
+    try {
+      val before = TxLog.snapshot(spark, root).collect().toSet
+      Seq(
+        s"DELETE FROM $tbl WHERE id IN (SELECT 3)",
+        s"UPDATE $tbl SET payload = 'u' WHERE id IN (SELECT 3)",
+        s"UPDATE $tbl SET payload = (SELECT 'u') WHERE id = 3"
+      ).foreach { stmt =>
+        val e = intercept[UnsupportedOperationException](s2.sql(stmt))
+        assert(e.getMessage.contains("subquer"), s"$stmt: ${e.getMessage}")
+      }
+      assert(TxLog.headVersion(root) === 1L)
+      assert(TxLog.snapshot(spark, root).collect().toSet === before)
+    } finally s2.sql(s"DROP TABLE IF EXISTS $tbl")
+  }
+
   test("SQL INSERT: append, overwrite, and atomic partition replace through the log") {
     val root = Zones.tempDir("dsins")
     import spark.implicits._

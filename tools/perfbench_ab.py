@@ -11,6 +11,9 @@ side goes first from seed to seed so slow drift of the host hits both
 sides alike. Prints, per workload, each end-to-end metric's median on
 both sides with the change in percent and how many seed pairs moved the
 better way, then the per-operation medians the runs log on stderr.
+Each end-to-end metric also shows its `bound` from BENCHMARK.json, the
+parent's quartile spread (IQR / median), and `WORSE>bound` when the
+change's median is worse than the parent's by more than that bound.
 With `--trace`, both sides run with `--trace 1`, which reports the
 per-layer metrics (`pipeline.preprocess_s`, `spark.stages`, ...) in place
 of the end-to-end ones; the same table then compares those.
@@ -60,6 +63,18 @@ def pct(a, b):
     return (b - a) / a * 100 if a else float("nan")
 
 
+def bound_check(parent_vals, p_med, c_med, sign, bound):
+    """Bound, the parent's IQR/median, and the WORSE>bound flag."""
+    if len(parent_vals) >= 2:
+        q1, _, q3 = statistics.quantiles(parent_vals, n=4, method="inclusive")
+    else:
+        q1 = q3 = p_med
+    spread = (q3 - q1) / p_med if p_med else float("nan")
+    worse = -sign * (c_med - p_med) / p_med if p_med else 0.0
+    flag = "  WORSE>bound" if worse > bound else ""
+    return f"  bound {bound:.0%}  parent IQR/median {spread:6.1%}{flag}"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--rev", default="HEAD", help="git revision to compare against")
@@ -75,6 +90,7 @@ def main():
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         bench = json.load(fh)
     better = {m["name"]: m["better"] for m in bench["end_to_end"] + bench["per_layer"]}
+    bounds = {m["name"]: m["bound"] for m in bench["end_to_end"]}
 
     parent = tempfile.mkdtemp(prefix="perfbench_ab_")
     try:
@@ -103,8 +119,10 @@ def main():
                     continue
                 sign = -1 if better.get(k) == "lower" else 1
                 wins = sum(1 for x, y in zip(pm, cm) if sign * (y[k] - x[k]) > 0)
+                check = (bound_check([r[k] for r in pm], p_med, c_med, sign, bounds[k])
+                         if k in bounds else "")
                 print(f"{k:30s} parent {p_med:10.4g}  change {c_med:10.4g}  "
-                      f"{pct(p_med, c_med):+7.1f}%  better in {wins}/{len(seeds)} pairs")
+                      f"{pct(p_med, c_med):+7.1f}%  better in {wins}/{len(seeds)} pairs{check}")
             for k in sorted(set().union(*po) & set().union(*co)):
                 p_med = statistics.median(r[k] for r in po if k in r)
                 c_med = statistics.median(r[k] for r in co if k in r)
