@@ -1,13 +1,13 @@
 package graft.io
 
 import java.io.ByteArrayInputStream
-import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge.{column => toCol, expression => toExpr}
 import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions.xxhash64
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -16,10 +16,11 @@ import org.apache.spark.util.sketch.BloomFilter
   * SECONDARY column (one the table isn't clustered by) spans essentially
   * the whole key domain in every file, so `id = X` reads the full table;
   * a bloom answers "provably absent from this file" for exactly that
-  * shape. The bitset is built by Spark's own `BloomFilterAggregate`
-  * (codegen'd update, mergeable partials — the aggregate behind runtime
-  * filter injection) over `xxhash64(col)`, one group per written file in
-  * the commit's single stats job, and lands as a SIDECAR next to its data
+  * shape. The bitset is a Spark `sketch.BloomFilter` over `xxhash64(col)`
+  * of every row, built by the commit's write as the rows stream out
+  * ([[WriteStats]]) byte-identical to what Spark's own
+  * `BloomFilterAggregate` ([[agg]], the aggregate behind runtime filter
+  * injection) computes. It lands as a SIDECAR next to its data
   * file (`file.parquet.<col>.bloom`, Parquet/Iceberg-Puffin layout) so
   * manifests stay skinny and checkpoint size is independent of index
   * size. The serialized `sketch.BloomFilter` self-describes its bit and
@@ -43,7 +44,8 @@ object Bloom {
   /** Bitset cap: 2^23 bits = 1 MiB per file per column. */
   val MaxBits: Long = 1L << 23
 
-  /** The aggregate producing one serialized bloom per group: insert
+  /** Spark's own aggregate producing one serialized bloom per group —
+    * the reference a file's bitset is byte-identical to: insert
     * `xxhash64(c)` of every row. Nulls hash like Spark hashes them (the
     * seed folds through), which costs one phantom bit pattern and
     * nothing else — equality lookups are never null-valued.
@@ -54,6 +56,19 @@ object Bloom {
     toCol(new BloomFilterAggregate(
       toExpr(xxhash64(c)), Literal(n), Literal(bits), 0, 0)
       .toAggregateExpression())
+  }
+
+  /** The `(items, bits)` [[agg]]'s aggregate creates its filter with —
+    * the sizing above after the aggregate's own caps — so
+    * `BloomFilter.create(items, bits)` fed the same hashes serializes to
+    * the same bytes.
+    */
+  def sizing(expectedItems: Long): (Long, Long) = {
+    val n = math.max(1L, expectedItems)
+    val bits = math.min(BloomFilter.optimalNumOfBits(n, Fpp), MaxBits)
+    val conf = SQLConf.get
+    (math.min(n, conf.getConf(SQLConf.RUNTIME_BLOOM_FILTER_MAX_NUM_ITEMS)),
+      math.min(bits, conf.getConf(SQLConf.RUNTIME_BLOOM_FILTER_MAX_NUM_BITS)))
   }
 
   /** Sidecar path of column `c`'s bitset for data file `p` (both
@@ -116,16 +131,6 @@ object Bloom {
       case _ => None // unreconcilable: caller keeps the file
     }
   }
-
-  /** Deserialize a sidecar's bitset; `None` on any structural problem
-    * (truncated write, foreign bytes) — the reader then keeps the file,
-    * pruning stays conservative.
-    */
-  def readSidecar(p: Path): Option[BloomFilter] =
-    try {
-      if (!Files.isRegularFile(p)) None
-      else Some(BloomFilter.readFrom(new ByteArrayInputStream(Files.readAllBytes(p))))
-    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Deserialize an already-fetched sidecar (any [[graft.io.LogStore]]
     * can produce the bytes); null or structurally broken bytes read as

@@ -86,7 +86,7 @@ object TxLog {
   type ColStats = Map[String, (Long, Long)]
 
   /** String-column zone map: [lo, hi] in UTF-8 binary order (Spark's own
-    * string ordering, so min/max computed by the commit's stats job and
+    * string ordering, so min/max recorded by the commit's write and
     * the pruning comparison agree byte for byte). Values longer than
     * [[StrStatMaxLen]] truncate: `lo` to a prefix (a prefix is byte-wise
     * ≤ the full value, so it remains a valid lower bound) and `hi` to
@@ -167,7 +167,7 @@ object TxLog {
   /** Truncation bound for string zone maps (chars). */
   val StrStatMaxLen: Int = 64
 
-  private def truncLo(s: String): String =
+  private[io] def truncLo(s: String): String =
     if (s.length <= StrStatMaxLen) s
     else {
       val t = s.substring(0, StrStatMaxLen)
@@ -175,7 +175,7 @@ object TxLog {
       // re-encode as U+FFFD and could break the lower-bound property
       if (Character.isHighSurrogate(t.last)) t.dropRight(1) else t
     }
-  private def truncHi(s: String): Option[String] =
+  private[io] def truncHi(s: String): Option[String] =
     if (s.length <= StrStatMaxLen) Some(s) else None
 
   /** Value-preserving upcasts the parquet readers evaluate natively
@@ -243,30 +243,6 @@ object TxLog {
     dt match {
       case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
-    }
-  }
-
-  /** The long-valued image of a column for its zone map, chosen so it
-    * EQUALS the Catalyst-internal value a pushed-down literal of that
-    * type carries — the file index then compares apples to apples with
-    * no reader-side conversion: integral → the value itself, date → days
-    * since epoch (a DateType literal IS an Int day count), timestamp →
-    * microseconds since epoch (a TimestampType literal IS a Long micros
-    * instant, timezone-independent). `o_orderdate BETWEEN date'..' AND
-    * date'..'` — the fact-table predicate shape — pruned nothing while
-    * zone maps were integral-only.
-    */
-  private def zoneMapExpr(
-      c: String,
-      dt: org.apache.spark.sql.types.DataType)
-      : Option[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.types._
-    import org.apache.spark.sql.functions.{datediff, to_date, unix_micros}
-    dt match {
-      case _ if isIntegral(dt) => Some(col(c).cast("long"))
-      case DateType => Some(datediff(col(c), to_date(lit("1970-01-01"))).cast("long"))
-      case TimestampType => Some(unix_micros(col(c)))
-      case _ => None
     }
   }
 
@@ -338,6 +314,15 @@ object TxLog {
   private[io] def absPath(root: String, p: String): String =
     if (p.startsWith("/") || p.contains("://") || p.startsWith("file:")) p
     else s"$root/$p"
+
+  /** `p` as a `spark.read` path that names exactly itself: Spark globs
+    * any read path holding a Hadoop glob metacharacter, so a root like
+    * `…/a\b` or `…/t[1]` would otherwise read as a pattern (and fail
+    * with PATH_NOT_FOUND). Every read of a root-derived path goes
+    * through here.
+    */
+  private[io] def literalPath(p: String): String =
+    p.replaceAll("""([\\\[\]{}*?])""", """\\$1""")
 
   /** The log format: one stamp, `"fmt":6`, on every file this writer
     * writes (see [[TxLogManifest]] for the encoding). A reader refuses
@@ -548,10 +533,14 @@ object TxLog {
 
   /** Commit `df` and return the version it landed as.
     *
-    * `statsCols`: integral columns to zone-map per written file — ONE
-    * Spark job over the written directory computes every file × column
-    * min/max (grouped by `input_file_name`), so an N-file commit costs
-    * one write job plus one stats job, never N footer jobs.
+    * The data files are written in ONE Spark job, and that job records
+    * each file's row count and statistics as its rows stream out
+    * ([[WriteStats]]) — no job reads the written files back. A file the
+    * write left empty is dropped from the manifest; a commit whose files
+    * are all empty publishes no entries but still records its schema.
+    *
+    * `statsCols`: columns to zone-map per written file — integral, date,
+    * timestamp and string columns; other types record no zone map.
     *
     * `carry`: pre-existing live entries (path + size + stats) to
     * re-reference in this manifest WITHOUT rewriting their data — the
@@ -569,7 +558,7 @@ object TxLog {
     *
     * `bloomCols`: column → expected distinct values PER FILE to
     * bloom-index. Each written file gets a sidecar bitset
-    * (`<file>.bloom`) built in the SAME single stats job, and the
+    * (`<file>.<col>.bloom`) built by the same write, and the
     * manifest entry records the indexed columns — point lookups
     * (`id = X`, `id IN (...)`) on a NON-clustering column then prune at
     * plan time where min/max zone maps are provably useless (a secondary
@@ -719,16 +708,52 @@ object TxLog {
     // renamed partition column keeps writing the directory name every
     // older generation already has, so the layout stays physically
     // uniform and the read resolves it back through the mapping.
-    if (partitionBy.isEmpty) physDf.write.mode(SaveMode.ErrorIfExists).parquet(dataDir)
-    else physDf.write.mode(SaveMode.ErrorIfExists)
-      .partitionBy(partitionBy.map(phys): _*).parquet(dataDir)
+    //
+    // The write itself records every file's row count (Delta's
+    // numRecords: with every live entry counted, COUNT(*) resolves from
+    // the log alone, see rowCount), the zone maps of `statsCols` and the
+    // bloom bitsets of `bloomCols` as the rows stream out ([[WriteStats]]),
+    // so the commit runs ONE job and never reads its files back. Stats and
+    // bloom columns resolve through the mapping: manifests key them by
+    // PHYSICAL name — exactly the attribute names pushed-down filters
+    // carry once the optimizer has rewritten them through the
+    // logical-alias projection. A partition column's stats come from its
+    // k=v value.
+    val byName = df.schema.fields.map(f => f.name -> f.dataType).toMap
+    val physParts = partitionBy.map(phys)
+    val dataCols = physDf.columns.toSeq.filterNot(physParts.contains)
+    def source(c: String): WriteStats.Source = {
+      val i = physParts.indexOf(phys(c))
+      WriteStats.Source(phys(c), if (i >= 0) i else dataCols.indexOf(phys(c)),
+        part = i >= 0, byName(c))
+    }
+    val present = statsCols.distinct.filter(byName.contains)
+    // bloom-indexed columns present in this commit's schema, with the
+    // caller's per-file distinct estimate (bitset sizing)
+    val bloomSpecs = bloomCols.toSeq.filter { case (c, _) => byName.contains(c) }
+    val tracker = new WriteStats.JobTracker(WriteStats.Spec(
+      zones = present.filter(c => WriteStats.longImage(byName(c))).map(source),
+      strs = present.filter(c =>
+        byName(c) == org.apache.spark.sql.types.StringType).map(source),
+      blooms = bloomSpecs.map { case (c, n) =>
+        val (items, bits) = Bloom.sizing(n)
+        (source(c), items, bits)
+      },
+      partDepth = physParts.size))
+    org.apache.spark.sql.GraftWriteBridge.writeParquet(physDf, dataDir, physParts, Seq(tracker))
+    // a zero-row file (the writer always writes partition 0's, even
+    // empty) never enters the manifest: it holds no row, and with no zone
+    // map every later merge would count it as touched
+    val (filled, empty) = tracker.files.partition(_.rows > 0L)
+    empty.foreach(f => try store(root).delete(s"$dataDir/${f.rel}")
+      catch { case scala.util.control.NonFatal(_) => false })
     // ONE recursive store walk returns every written file with its size
     // (on an object store that is one paged LIST, never stat-per-file)
     val writtenSizes: Map[String, Long] = store(root).walk(dataDir).iterator
       .filter(_.relPath.endsWith(".parquet"))
       .map(m => s"data/txn-$txn/${m.relPath}" -> m.size)
       .toMap
-    val written = writtenSizes.keys.toSeq.sorted
+    val written = filled.map(f => s"data/txn-$txn/${f.rel}" -> f).sortBy(_._1)
     // CHECK constraints: a read-back scan of the commit's OWN files —
     // proportional to the commit, never to the table (carried files were
     // validated when written, and [[addConstraint]] validates the whole
@@ -744,7 +769,7 @@ object TxLog {
         val backPhys = spark.read
           .schema(deepNullable(physDf.schema)
             .asInstanceOf[org.apache.spark.sql.types.StructType])
-          .parquet(dataDir)
+          .parquet(literalPath(dataDir))
         val back =
           if (effMap.isEmpty) backPhys
           else backPhys.select(df.columns.toSeq.map(c =>
@@ -781,194 +806,18 @@ object TxLog {
       if (written.isEmpty) None
       else Some((consReadHead,
         m => if (m != consValidated) validateConstraints(m)))
-    // optional per-file zone maps: min/max of each stats column per
-    // written file, serialized into the manifest so readers can skip
-    // files whose range can't match. ONE aggregation job over the
-    // written directory (grouped by input_file_name) covers integral AND
-    // string columns — proportional to the commit, never to the table,
-    // and never one-job-per-file
-    val byName = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    // stats/bloom columns resolve through the mapping: manifests key
-    // zone maps and bloom declarations by PHYSICAL name — exactly the
-    // attribute names pushed-down filters carry once the optimizer has
-    // rewritten them through the logical-alias projection
-    // long-valued zone maps: integral columns, plus date/timestamp via
-    // their Catalyst-internal day/micros image (see zoneMapExpr)
-    val intCols: Seq[(String, org.apache.spark.sql.Column)] =
-      statsCols.flatMap(c => byName.get(c).flatMap(dt => zoneMapExpr(phys(c), dt))
-        .map(e => phys(c) -> e))
-    val strCols = statsCols.filter(c =>
-      byName.get(c).contains(org.apache.spark.sql.types.StringType)).map(phys)
-    // bloom-indexed columns present in this commit's schema, with the
-    // caller's per-file distinct estimate (bitset sizing)
-    val bloomSpecs: Seq[(String, Long)] = bloomCols.toSeq
-      .filter { case (c, _) => byName.contains(c) }
-      .map { case (c, n) => phys(c) -> n }.sortBy(_._1)
-    // the stats pass runs for EVERY commit that wrote files — even with no
-    // zone-map/bloom column requested it still records per-file row
-    // counts, so metadata-only COUNT(*)/DESCRIBE DETAIL never degrade to
-    // a scan just because one caller forgot statsCols (the reference
-    // lakehouse engines always record numRecords for the same reason).
-    //
-    // Integral zone maps come straight out of the just-written parquet
-    // FOOTERS driver-side (one fewer Spark job per commit — the
-    // write job's own chunk statistics ARE the min/max the agg computed;
-    // exact for INT32/INT64 physical types). Strings (writer-side
-    // truncation semantics), dates (under LEGACY datetime rebase the
-    // footer holds hybrid-calendar day counts, while pushed-down
-    // literals are proleptic — the read-back rebases), timestamps (INT96
-    // default carries no stats), blooms (need the values) and
-    // partition-valued stats columns (not in the file bytes) keep the
-    // one-job read-back, as do >32-file commits where the job amortizes
-    // better than sequential driver round-trips.
-    val footerZoneMaps = intCols.nonEmpty && strCols.isEmpty &&
-      bloomSpecs.isEmpty &&
-      statsCols.flatMap(byName.get).forall(isIntegral) &&
-      statsCols.map(phys).toSet
-        .intersect(partitionBy.map(phys).toSet).isEmpty
-    val statsJobRuns = written.nonEmpty &&
-      (strCols.nonEmpty || bloomSpecs.nonEmpty || written.size > 32 ||
-        (intCols.nonEmpty && !footerZoneMaps))
-    def viaFooters(): (Map[String, ColStats], Map[String, StrColStats],
-        Set[String], Map[String, Long]) = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val wanted = intCols.map(_._1).toSet
-      val perFile = written.map { p =>
-        val f = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(absPath(root, p)), conf))
-        try {
-          val acc = scala.collection.mutable.Map[String, (Long, Long)]()
-          if (wanted.nonEmpty) {
-            f.getFooter.getBlocks.forEach { blk =>
-              blk.getColumns.forEach { ch =>
-                val c = ch.getPath.toDotString
-                if (wanted(c)) {
-                  val st = ch.getStatistics
-                  // a chunk whose statistics were never written can't
-                  // prove anything — bail to the aggregation job
-                  require(st != null && (st.hasNonNullValue || st.isNumNullsSet),
-                    s"txlog: footer stats absent for $c in $p")
-                  if (st.hasNonNullValue) {
-                    val lo = st.genericGetMin.asInstanceOf[Number].longValue
-                    val hi = st.genericGetMax.asInstanceOf[Number].longValue
-                    val cur = acc.get(c)
-                    acc(c) = (cur.fold(lo)(v => math.min(v._1, lo)),
-                      cur.fold(hi)(v => math.max(v._2, hi)))
-                  }
-                }
-              }
-            }
-          }
-          // an all-null column contributes no chunk stats → omitted,
-          // exactly like the aggregation path's null-lo/hi skip
-          (p, acc.toMap: ColStats, f.getRecordCount)
-        } finally f.close()
-      }
-      (perFile.map(t => t._1 -> t._2).toMap,
-        Map.empty[String, StrColStats], Set.empty[String],
-        perFile.map(t => t._1 -> t._3).toMap)
-    }
-    def viaAggJob(): (Map[String, ColStats], Map[String, StrColStats],
-        Set[String], Map[String, Long]) = {
-        // row counts ride the same job for free — Delta's numRecords;
-        // with every live entry counted, COUNT(*) resolves from the log
-        // alone (see rowCount)
-        val aggs = Seq(org.apache.spark.sql.functions.count(lit(1)).as("_rc")) ++
-          intCols.flatMap { case (c, e) => Seq(
-            min(e).as(s"lo_$c"),
-            max(e).as(s"hi_$c")) } ++
-          strCols.flatMap(c => Seq(
-            min(col(c)).as(s"slo_$c"),
-            max(col(c)).as(s"shi_$c"))) ++
-          bloomSpecs.map { case (c, n) => Bloom.agg(col(c), n).as(s"bf_$c") }
-        // pin the commit's own schema: partition-value type INFERENCE
-        // could otherwise re-type a numeric-looking string partition
-        // column and break the stats extraction
-        val rows = spark.read
-          .schema(deepNullable(physDf.schema)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-          .parquet(dataDir)
-          .groupBy(input_file_name().as("_f"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect()
-        // key stats by the file's path RELATIVE to the txn dir, so a
-        // partitioned commit's k=v subdirs key identically to manifests
-        // (tail extraction off the uuid dir works for local paths and
-        // scheme-ful URIs alike — the uuid cannot recur inside the path)
-        def rel(uri: String): String = {
-          val p = try new java.net.URI(uri).getPath catch { case scala.util.control.NonFatal(_) => uri }
-          val tag = s"data/txn-$txn/"
-          val i = p.lastIndexOf(tag)
-          require(i >= 0, s"txlog: unexpected written-file uri $uri")
-          p.substring(i)
-        }
-        val ints = rows.map { r =>
-          val cs: ColStats = intCols.flatMap { case (c, _) =>
-            val lo = r.getAs[Any](s"lo_$c"); val hi = r.getAs[Any](s"hi_$c")
-            if (lo == null || hi == null) None // all-null file: no stats
-            else Some(c -> (lo.asInstanceOf[Long], hi.asInstanceOf[Long]))
-          }.toMap
-          rel(r.getString(0)) -> cs
-        }.toMap
-        val strs = rows.map { r =>
-          val cs: StrColStats = strCols.flatMap { c =>
-            val lo = r.getAs[String](s"slo_$c"); val hi = r.getAs[String](s"shi_$c")
-            if (lo == null || hi == null) None // all-null file: no stats
-            else Some(c -> (truncLo(lo), truncHi(hi)))
-          }.toMap
-          rel(r.getString(0)) -> cs
-        }.toMap
-        // sidecar bitsets land next to their data files BEFORE the
-        // manifest references them (same ordering discipline as the data
-        // itself) — a driver round-trip bounded by the commit's file
-        // count × capped bitset size, never by the table
-        val bloomed: Set[String] =
-          if (bloomSpecs.isEmpty) Set.empty
-          else rows.flatMap { r =>
-            val p = rel(r.getString(0))
-            val wrote = bloomSpecs.forall { case (c, _) =>
-              val bytes = r.getAs[Array[Byte]](s"bf_$c")
-              if (bytes == null) false
-              else {
-                store(root).putReplace(s"$root/${Bloom.sidecar(p, c)}", bytes)
-                true
-              }
-            }
-            if (wrote) Some(p) else None
-          }.toSet
-        val rcs = rows.map(r => rel(r.getString(0)) -> r.getAs[Long]("_rc")).toMap
-        (ints, strs, bloomed, rcs)
-      }
-    val (fileStats: Map[String, ColStats],
-      fileStrStats: Map[String, StrColStats],
-      fileBloomed: Set[String],
-      fileRows: Map[String, Long]) =
-      if (written.isEmpty)
-        (Map.empty[String, ColStats], Map.empty[String, StrColStats],
-          Set.empty[String], Map.empty[String, Long])
-      else if (!statsJobRuns) {
-        // footer extraction is conservative: any chunk with absent
-        // statistics bails out to the one aggregation job
-        try viaFooters()
-        catch { case scala.util.control.NonFatal(_) => viaAggJob() }
-      } else viaAggJob()
-    val bloomTypes: BloomCols = bloomCols.toSeq
-      .filter { case (c, _) => byName.contains(c) }
-      .map { case (c, _) => phys(c) -> byName(c).catalogString }.toMap
+    // sidecar bitsets land next to their data files BEFORE the manifest
+    // references them (same ordering discipline as the data itself)
+    val bloomTypes: BloomCols =
+      bloomSpecs.map { case (c, _) => phys(c) -> byName(c).catalogString }.toMap
     val entries: Seq[Entry] =
-      carry ++ written.map(p =>
-        Entry(p, writtenSizes.get(p),
-          fileStats.getOrElse(p, Map.empty),
-          fileStrStats.getOrElse(p, Map.empty),
-          // a file the stats job never saw (a zero-row part file) gets
-          // no sidecar and therefore declares no bloom — readers keep it
-          if (fileBloomed.contains(p)) bloomTypes else Map.empty,
-          // a written file the stats job saw no rows for is a zero-row
-          // part file: its count is exactly 0, not unknown (the footer
-          // path counts every file directly)
-          rows = fileRows.get(p)
-            .orElse(if (written.nonEmpty) Some(0L) else None)))
+      carry ++ written.map { case (p, f) =>
+        f.blooms.foreach { case (c, bytes) =>
+          store(root).putReplace(s"$root/${Bloom.sidecar(p, c)}", bytes)
+        }
+        Entry(p, writtenSizes.get(p), f.zones, f.strs,
+          if (f.blooms.isEmpty) Map.empty else bloomTypes, rows = Some(f.rows))
+      }
     // record the commit's schema so readers resolve theirs from the
     // LOG, never from O(live files) footer reads; a carry-bearing
     // commit must cover the carried files' columns too, so it merges
@@ -1275,14 +1124,16 @@ object TxLog {
     * footer) is touched, which at 100 TB is the difference between an
     * instant answer and a full scan (Delta answers `count(*)` from
     * numRecords the same way). `None` when any live entry predates
-    * row-count recording or was committed without a stats job — the
-    * caller falls back to `snapshot(...).count()`, never to a wrong
-    * number. Row counts ride the commit's existing stats job for free;
+    * row-count recording — the caller falls back to
+    * `snapshot(...).count()`, never to a wrong number. Row counts are
+    * recorded by the commit's write itself;
     * deletion vectors maintain per-file deleted counts at delete time.
     */
   def rowCount(root: String, version: Option[Long] = None): Option[Long] = {
     val r = replay(root, version.getOrElse(headVersion(root)))
-    if (r.entries.isEmpty || r.entries.exists(_.rows.isEmpty)) None
+    // no entry and no recorded schema: no such version (an emptied
+    // table keeps its schema and counts 0)
+    if (r.entries.exists(_.rows.isEmpty) || (r.entries.isEmpty && r.schema.isEmpty)) None
     else Some(r.entries.iterator.map(e => e.rows.get - e.dvRows).sum)
   }
 
@@ -1764,11 +1615,7 @@ object TxLog {
           .unionByName(updates.withColumn(side, lit(1)), allowMissingColumns = true)
         // range cuts at the touched files' edges, when their zone maps
         // are disjoint. A row's range is the number of cuts at or below
-        // its key, minus one, mod the range count: the lowest touched
-        // file's keys are range 0 — a write task always writes a file
-        // for partition 0, even an empty one, and this range holds at
-        // least the update key that touched the file — and keys below
-        // every cut (null keys too) take the last range
+        // its key: keys below every cut (null keys too) take range 0
         val sorted = spans.sortBy(_._1)
         val cuts: Seq[Long] =
           if (sorted.zip(sorted.drop(1)).exists { case (a, b) => a._2 >= b._1 }) Nil
@@ -1778,7 +1625,7 @@ object TxLog {
         val range = "_merge_range"
         val ranged = both.withColumn(range, cuts
           .map(c => when(col(keyCol) >= c, 1).otherwise(0))
-          .foldLeft(lit(cuts.size))(_ + _) % (cuts.size + 1))
+          .foldLeft(lit(0))(_ + _))
         val byKey = Window.partitionBy(col(range), col(keyCol))
         val matched = col(keyCol).isNotNull &&
           min(side).over(byKey) === 0 && max(side).over(byKey) === 1
@@ -1831,7 +1678,8 @@ object TxLog {
       targetFiles: Int,
       sortCol: Option[String] = None): Long = {
     readModifyWrite(root, "optimize") { (base, r) =>
-      require(r.entries.nonEmpty, s"txlog: optimize of $root found no files")
+      require(r.entries.nonEmpty || r.schema.nonEmpty,
+        s"txlog: optimize of $root found no files")
       val cur = TxLogFileIndex.read(spark, root, r)
       val laid = sortCol match {
         case Some(c) => cur.repartitionByRange(
@@ -1869,15 +1717,10 @@ object TxLog {
       statsCols: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions.{coalesce, not}
     readModifyWrite(root, "delete") { (base, r) =>
-      val touched =
-        if (r.entries.isEmpty) Vector.empty
-        else candidateEntries(spark, root, r, predicate)
+      val touched = candidateEntries(spark, root, r, predicate)
       if (touched.isEmpty) base // provably no matching row anywhere: no-op
       else {
-        val untouched = {
-          val t = touched.map(_.path).toSet
-          r.entries.filterNot(e => t(e.path))
-        }
+        val untouched = r.entries.diff(touched)
         val old = TxLogFileIndex.read(spark, root, r.copy(entries = touched))
         // NULL predicate ⇒ not deleted: both branches coalesce to false
         val hit = coalesce(predicate, lit(false))
@@ -1909,103 +1752,32 @@ object TxLog {
     * deletes — rewrites read through the DV-applied view, so their
     * output files drop the refs naturally and carried files keep theirs.
     *
-    * Positions come from the scan's `_metadata.row_index` (physical row
-    * position, stable because data files are immutable), computed over
-    * the CURRENT DV-applied view so a twice-deleted row is neither
-    * re-reported to the change feed nor double-counted. Plan-time
-    * pruning bounds the scan to candidate files exactly as [[delete]]'s.
     * Deleted rows persist to `_change_data/` tagged `delete`, so the
     * typed CDF reads through this commit identically to a copy-on-write
     * delete. Zone maps and blooms of a DV-bearing file stay valid
     * (conservative: they may keep a file whose matches are all deleted —
     * never the reverse). NULL predicate rows are not deleted (SQL
-    * DELETE semantics).
+    * DELETE semantics). See [[vectorDml]] for the jobs it runs.
     */
   def deleteVectors(
       spark: SparkSession,
       root: String,
-      predicate: org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce}
-    readModifyWrite(root, "deleteVectors") { (base, r) =>
-      val touched =
-        if (r.entries.isEmpty) Vector.empty
-        else candidateEntries(spark, root, r, predicate)
-      if (touched.isEmpty) base // provably no matching row anywhere: no-op
-      else {
-        val tagged = TxLogFileIndex.readTagged(spark, root,
-          r.copy(entries = touched))
-        val hit = coalesce(predicate, lit(false))
-        val matched = tagged.filter(hit)
-        // the positions, keyed by the file's manifest path — resolved by
-        // EXACT txn-tail equality against the candidate entry list
-        // (relative, external, and URI forms all share the tail; a
-        // suffix test could alias under a tail collision, which
-        // readTagged refuses loudly), written as one compact dir
-        val paths = spark.createDataFrame(touched.map(e =>
-          (e.path, TxLogFileIndex.pathTail(e.path)))).toDF("p", "tail")
-        val dvDir = s"_dv/txn-${java.util.UUID.randomUUID().toString.take(12)}"
-        // position writes parallelize BY FILE, task count bounded — a
-        // billion-row GDPR pass must not funnel its whole vector through
-        // one writer (readers read the dir as a unit either way)
-        matched
-          .select(TxLogFileIndex.pathTailCol(col(TxLogFileIndex.FpCol))
-            .as("ftail"), col(TxLogFileIndex.PosCol).as("pos"))
-          .join(broadcast(paths), col("ftail") === col("tail"))
-          .select("p", "pos")
-          .repartition(math.max(1, math.min(64, touched.size)), col("p"))
-          .write.mode(SaveMode.ErrorIfExists).parquet(s"$root/$dvDir")
-        // which files actually hold a match (and how many rows): read
-        // the (tiny) vector back — the per-file deleted counts keep
-        // metadata-only COUNT(*) exact (see rowCount)
-        val dvCounts: Map[String, Long] = spark.read.parquet(s"$root/$dvDir")
-          .groupBy("p").count().collect()
-          .map(r0 => r0.getString(0) -> r0.getLong(1)).toMap
-        if (dvCounts.isEmpty) {
-          // no row matched: a clean no-op — remove the empty vector dir
-          // rather than leaving vacuum-bait residue, and write no change
-          // data at all (the delta is empty by construction)
-          deleteDirRecursive(s"$root/$dvDir")
-          base
-        } else {
-          // the delta is provably non-empty: NOW persist it for the CDF
-          val cdfDir = s"txn-${java.util.UUID.randomUUID().toString.take(12)}"
-          toPhysical(matched.drop(TxLogFileIndex.FpCol, TxLogFileIndex.PosCol)
-            .withColumn("_change_type", lit("delete")), r)
-            .write.mode(SaveMode.ErrorIfExists)
-            .parquet(s"$root/_change_data/$cdfDir")
-          val entries = r.entries.map(e => dvCounts.get(e.path) match {
-            case Some(n) => e.copy(dvs = e.dvs :+ dvDir, dvRows = e.dvRows + n)
-            case None    => e
-          })
-          // record the vector's byte size in the manifest, so readers
-          // size the broadcast-vs-shuffle decision from the log alone
-          val dvSize = store(root).walk(s"$root/$dvDir").iterator
-            .map(_.size).sum
-          publish(root, entries, Overwrite, txnId = None,
-            recorded = r.schema, expectHead = Some(base),
-            txn = java.util.UUID.randomUUID().toString.take(12),
-            cdf = Some(cdfDir), partitionBy = layoutOf(root, r),
-            op = Some("DELETE VECTORS"), dvb = Map(dvDir -> dvSize),
-            touched = dvCounts.keySet,
-            rebaseDvTouched = Some(dvCounts.keySet))
-        }
-      }
-    }
-  }
+      predicate: org.apache.spark.sql.Column): Long =
+    vectorDml(spark, root, predicate, Map.empty, Nil)
 
   /** Merge-on-read UPDATE: the old row images become deletion-vector
-    * positions (no data file rewritten) and the post-images land as ONE
-    * appended file in the same commit — write cost O(matched rows),
-    * where [[update]]'s copy-on-write rewrites every row of every
-    * touched file. Same SQL semantics as [[update]]: every SET
-    * right-hand side evaluates against the OLD row (`SET a = b, b = a`
-    * swaps), a NULL predicate leaves the row untouched, assignments must
-    * target existing columns. Pre/post images persist to the typed
-    * change feed identically to the copy-on-write path; CHECK
-    * constraints validate the post-images (the commit's read-back covers
-    * exactly the new rows); updating a hive partition column re-lands
-    * each post-image row in its new k=v dir. Matched-position
-    * bookkeeping is [[deleteVectors]]'s, so composition, rewrite
+    * positions (no data file rewritten) and the post-images land as new
+    * files in the same commit — write cost O(matched rows), where
+    * [[update]]'s copy-on-write rewrites every row of every touched
+    * file. Same SQL semantics as [[update]]: every SET right-hand side
+    * evaluates against the OLD row (`SET a = b, b = a` swaps), a NULL
+    * predicate leaves the row untouched, assignments must target
+    * existing columns. Pre/post images persist to the typed change feed
+    * identically to the copy-on-write path; CHECK constraints validate
+    * the post-images (the commit's read-back covers exactly the new
+    * rows); updating a hive partition column re-lands each post-image
+    * row in its new k=v dir. Matched-position bookkeeping is
+    * [[deleteVectors]]'s ([[vectorDml]]), so composition, rewrite
     * materialization, vacuum lifetime, and clone resolution all hold.
     */
   def updateVectors(
@@ -2014,93 +1786,114 @@ object TxLog {
       predicate: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column],
       statsCols: Seq[String] = Nil): Long = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce}
     require(set.nonEmpty, "txlog: UPDATE needs at least one SET assignment")
-    readModifyWrite(root, "updateVectors") { (base, r) =>
-      val touched =
-        if (r.entries.isEmpty) Vector.empty
-        else candidateEntries(spark, root, r, predicate)
+    vectorDml(spark, root, predicate, set, statsCols)
+  }
+
+  /** The deletion-vector DML skeleton: a DELETE when `set` is empty, an
+    * UPDATE otherwise. Serializable read-modify-write like merge.
+    *
+    *  1. Candidates: the files plan-time pruning keeps for `predicate`
+    *     (zone maps and partition dirs, no job, as [[delete]]'s); none
+    *     is a no-op.
+    *  2. Matched rows: the candidates' CURRENT DV-applied view (so a
+    *     twice-deleted row is neither re-reported to the change feed nor
+    *     double-counted), filtered by `predicate`, each row tagged with
+    *     its physical position (`_metadata.row_index`, stable because
+    *     data files are immutable) and its file's MANIFEST path, looked
+    *     up by exact txn tail in a literal map (relative, external and
+    *     URI forms share the tail; [[TxLogFileIndex.readTagged]] refuses
+    *     colliding tails). The rows are persisted once.
+    *  3. ONE pass over the persisted rows fills the cache and counts
+    *     the matches per file — the per-file deleted counts keep
+    *     metadata-only COUNT(*) exact (see rowCount). No match: nothing
+    *     is written and the head is returned.
+    *  4. From the cache: the positions (`_dv/txn-*`, columns `p`, `pos`)
+    *     and the change rows (`delete`, or update pre- and post-images),
+    *     one write job each; an UPDATE commits the post-images as a
+    *     third.
+    */
+  private def vectorDml(
+      spark: SparkSession,
+      root: String,
+      predicate: org.apache.spark.sql.Column,
+      set: Map[String, org.apache.spark.sql.Column],
+      statsCols: Seq[String]): Long = {
+    import org.apache.spark.sql.functions.{coalesce, element_at, typedLit}
+    import TxLogFileIndex.{FpCol, PosCol}
+    val op = if (set.isEmpty) "DELETE VECTORS" else "UPDATE VECTORS"
+    readModifyWrite(root, op) { (base, r) =>
+      val touched = candidateEntries(spark, root, r, predicate)
       if (touched.isEmpty) base // provably no matching row anywhere: no-op
       else {
         val tagged = TxLogFileIndex.readTagged(spark, root,
           r.copy(entries = touched))
-        val dataCols = tagged.columns.filterNot(c =>
-          c == TxLogFileIndex.FpCol || c == TxLogFileIndex.PosCol).toSeq
+        val dataCols = tagged.columns.toSeq.filterNot(c => c == FpCol || c == PosCol)
         val unknown = set.keySet -- dataCols.toSet
         require(unknown.isEmpty,
           s"txlog: UPDATE SET targets unknown columns ${unknown.mkString(", ")}")
+        val manifestPath = typedLit(touched.map(e =>
+          TxLogFileIndex.pathTail(e.path) -> e.path).toMap)
         val matched = tagged.filter(coalesce(predicate, lit(false)))
-        // only matched rows are rewritten, so every RHS reads the old
-        // row directly — no hit-flag gymnastics needed here
-        val post = matched.select(dataCols.map(c =>
-          set.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-        // positions first (exact txn-tail identity, see deleteVectors);
-        // the change images land only once a match is proven, so a
-        // no-match update leaves no residue behind
-        val paths = spark.createDataFrame(touched.map(e =>
-          (e.path, TxLogFileIndex.pathTail(e.path)))).toDF("p", "tail")
-        val dvDir = s"_dv/txn-${java.util.UUID.randomUUID().toString.take(12)}"
-        matched
-          .select(TxLogFileIndex.pathTailCol(col(TxLogFileIndex.FpCol))
-            .as("ftail"), col(TxLogFileIndex.PosCol).as("pos"))
-          .join(broadcast(paths), col("ftail") === col("tail"))
-          .select("p", "pos")
-          .repartition(math.max(1, math.min(64, touched.size)), col("p"))
-          .write.mode(SaveMode.ErrorIfExists).parquet(s"$root/$dvDir")
-        val dvCounts: Map[String, Long] = spark.read.parquet(s"$root/$dvDir")
-          .groupBy("p").count().collect()
-          .map(r0 => r0.getString(0) -> r0.getLong(1)).toMap
-        if (dvCounts.isEmpty) {
-          deleteDirRecursive(s"$root/$dvDir") // clean no-op, no residue
-          base
-        } else {
-          val cdfDir = s"txn-${java.util.UUID.randomUUID().toString.take(12)}"
-          toPhysical(matched.select(dataCols.map(col): _*)
-            .withColumn("_change_type", lit("update_preimage"))
-            .unionByName(post.withColumn("_change_type", lit("update_postimage"))), r)
-            .write.mode(SaveMode.ErrorIfExists)
-            .parquet(s"$root/_change_data/$cdfDir")
-          val carried = r.entries.map(e => dvCounts.get(e.path) match {
-            case Some(n) => e.copy(dvs = e.dvs :+ dvDir, dvRows = e.dvRows + n)
-            case None    => e
-          })
-          val dvSize = store(root).walk(s"$root/$dvDir").iterator
-            .map(_.size).sum
-          commit(spark, root, post, Overwrite,
-            statsCols = statsCols, carry = carried, carrySchema = r.schema,
-            expectHead = Some(base), cdf = Some(cdfDir),
-            partitionBy = layoutOf(root, r), op = Some("UPDATE VECTORS"),
-            dvb = Map(dvDir -> dvSize), touched = dvCounts.keySet,
-            rebaseDvTouched = Some(dvCounts.keySet))
-        }
+          .withColumn(FpCol, element_at(manifestPath,
+            TxLogFileIndex.pathTailCol(col(FpCol))))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          val hits: Map[String, Long] = matched.select(FpCol).queryExecution.toRdd
+            .mapPartitions { rows =>
+              val n = scala.collection.mutable.HashMap.empty[String, Long]
+              rows.foreach { row =>
+                require(!row.isNullAt(0), "txlog: a matched row's file is not a candidate entry")
+                val p = row.getUTF8String(0).toString
+                n(p) = n.getOrElse(p, 0L) + 1L
+              }
+              Iterator.single(n.toMap)
+            }.collect()
+            .foldLeft(Map.empty[String, Long]) { (acc, m) =>
+              m.foldLeft(acc) { case (a, (p, k)) => a.updated(p, a.getOrElse(p, 0L) + k) }
+            }
+          if (hits.isEmpty) base
+          else {
+            val dvDir = s"_dv/txn-${java.util.UUID.randomUUID().toString.take(12)}"
+            matched.select(col(FpCol).as("p"), col(PosCol).as("pos"))
+              .write.mode(SaveMode.ErrorIfExists).parquet(s"$root/$dvDir")
+            val old = matched.select(dataCols.map(col): _*)
+            // every SET right-hand side reads the old row
+            val post = matched.select(dataCols.map(c =>
+              set.get(c).map(_.as(c)).getOrElse(col(c))): _*)
+            val cdfDir = s"txn-${java.util.UUID.randomUUID().toString.take(12)}"
+            toPhysical(
+              if (set.isEmpty) old.withColumn("_change_type", lit("delete"))
+              else old.withColumn("_change_type", lit("update_preimage"))
+                .unionByName(post.withColumn("_change_type", lit("update_postimage"))), r)
+              .write.mode(SaveMode.ErrorIfExists)
+              .parquet(s"$root/_change_data/$cdfDir")
+            val entries = r.entries.map(e => hits.get(e.path) match {
+              case Some(n) => e.copy(dvs = e.dvs :+ dvDir, dvRows = e.dvRows + n)
+              case None    => e
+            })
+            // record the vector's byte size in the manifest, so readers
+            // size the broadcast-vs-shuffle decision from the log alone
+            val dvb = Map(dvDir -> store(root).walk(s"$root/$dvDir").iterator.map(_.size).sum)
+            if (set.isEmpty)
+              publish(root, entries, Overwrite, txnId = None,
+                recorded = r.schema, expectHead = Some(base),
+                txn = java.util.UUID.randomUUID().toString.take(12),
+                cdf = Some(cdfDir), partitionBy = layoutOf(root, r),
+                op = Some(op), dvb = dvb, touched = hits.keySet,
+                rebaseDvTouched = Some(hits.keySet))
+            else
+              commit(spark, root, post, Overwrite,
+                statsCols = statsCols, carry = entries, carrySchema = r.schema,
+                expectHead = Some(base), cdf = Some(cdfDir),
+                partitionBy = layoutOf(root, r), op = Some(op),
+                dvb = dvb, touched = hits.keySet,
+                rebaseDvTouched = Some(hits.keySet))
+          }
+        } finally matched.unpersist()
       }
     }
   }
-
-  /** Driver-side recursive delete of a small abandoned side dir (an
-    * empty deletion vector after a no-match DML) — bounded by the dir's
-    * own file count, best-effort (anything left is ordinary vacuumable
-    * residue, so a failure here costs nothing).
-    */
-  private def deleteDirRecursive(dir: String): Unit =
-    try {
-      val s = LogStore.forRoot(dir)
-      if (s.isDir(dir)) {
-        s.walk(dir).foreach(f =>
-          try s.delete(s"$dir/${f.relPath}") catch { case scala.util.control.NonFatal(_) => () })
-        (s.walkDirs(dir).map(r => s"$dir/$r") :+ dir)
-          .sortBy(-_.count(_ == '/'))
-          .foreach(d => try s.delete(d) catch { case scala.util.control.NonFatal(_) => () })
-        // and the now-maybe-empty parent (`_dv`/`_change_data`) — delete
-        // refuses a non-empty dir, so this is safe — keeping a no-op DML
-        // from leaving any trace in the table tree
-        val cut = dir.lastIndexOf('/')
-        if (cut > 0) {
-          val parent = dir.substring(0, cut)
-          try s.delete(parent) catch { case scala.util.control.NonFatal(_) => () }
-        }
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
 
   private def splitAnds(
       e: org.apache.spark.sql.catalyst.expressions.Expression)
@@ -2125,7 +1918,7 @@ object TxLog {
     // reads as a union of scans — plan-time pruning below assumes one
     // index, so fall back to "every file is a candidate" (conservative,
     // correct; the state is transitional until a compact migrates it)
-    if (r.entries.map(e => TxLogFileIndex.layoutOfPath(e.path)).distinct.size > 1)
+    if (r.entries.map(e => TxLogFileIndex.layoutOfPath(e.path)).distinct.size != 1)
       return r.entries
     val snap = TxLogFileIndex.read(spark, root, r)
     val index = TxLogFileIndex.of(snap)
@@ -2165,15 +1958,10 @@ object TxLog {
     import org.apache.spark.sql.functions.coalesce
     require(set.nonEmpty, "txlog: UPDATE needs at least one SET assignment")
     readModifyWrite(root, "update") { (base, r) =>
-      val touched =
-        if (r.entries.isEmpty) Vector.empty
-        else candidateEntries(spark, root, r, predicate)
+      val touched = candidateEntries(spark, root, r, predicate)
       if (touched.isEmpty) base // provably no matching row anywhere: no-op
       else {
-        val untouched = {
-          val t = touched.map(_.path).toSet
-          r.entries.filterNot(e => t(e.path))
-        }
+        val untouched = r.entries.diff(touched)
         val old = TxLogFileIndex.read(spark, root, r.copy(entries = touched))
         val unknown = set.keySet -- old.columns.toSet
         require(unknown.isEmpty,
@@ -2218,7 +2006,8 @@ object TxLog {
       colB: String,
       bits: Int = 8): Long =
     readModifyWrite(root, "optimizeZOrder") { (base, r) =>
-      require(r.entries.nonEmpty, s"txlog: optimize of $root found no files")
+      require(r.entries.nonEmpty || r.schema.nonEmpty,
+        s"txlog: optimize of $root found no files")
       val cur = TxLogFileIndex.read(spark, root, r)
       val zv = ZOrder.zvalue(cur, colA, colB, bits)
       val laid = cur.repartitionByRange(targetFiles, zv).sortWithinPartitions(zv)
@@ -2501,7 +2290,9 @@ object TxLog {
   def snapshot(spark: SparkSession, root: String, version: Option[Long] = None): DataFrame = {
     val v = version.getOrElse(headVersion(root))
     val r = replay(root, v)
-    require(r.files.nonEmpty, s"txlog: snapshot v$v of $root lists no files")
+    // a version whose commits left no file still has a recorded schema
+    require(r.files.nonEmpty || r.schema.nonEmpty,
+      s"txlog: snapshot v$v of $root lists no files")
     TxLogFileIndex.read(spark, root, r)
   }
 
@@ -2612,7 +2403,7 @@ object TxLog {
         // read unioned N times would bloat the plan linearly with the
         // catch-up range
         import org.apache.spark.sql.functions.{coalesce, element_at, regexp_extract}
-        val all = nonEmpty.flatMap(_._2).map(f => s"$root/$f")
+        val all = nonEmpty.flatMap(_._2).map(f => literalPath(s"$root/$f"))
         val dirToV = nonEmpty.flatMap { case (v, fs) =>
           fs.map(f => f.split("/")(1) -> v)
         }.distinct

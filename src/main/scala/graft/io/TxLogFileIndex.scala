@@ -458,8 +458,9 @@ object TxLogFileIndex {
       require(tails.distinct.size == tails.size,
         s"txlog: $root's live set has colliding txn path tails — cannot " +
           s"attribute deletion vectors safely: ${tails.mkString(", ")}")
-      val paths = dvDirs.map(d => TxLog.absPath(root, d))
-      val dv = spark.read.parquet(paths: _*)
+      // the vector schema is known, so the read infers nothing
+      val paths = dvDirs.map(d => TxLog.literalPath(TxLog.absPath(root, d)))
+      val dv = spark.read.schema("p string, pos long").parquet(paths: _*)
         .select(pathTailCol(col("p")).as("_dv_tail"),
           col("pos").as("_dv_pos"))
       // broadcast the vector only while it actually fits an executor —
@@ -534,7 +535,7 @@ object TxLogFileIndex {
     // carry) and a projection aliases them back to the logical schema.
     // Pushed-down filters rewrite through the aliases during
     // optimization, so zone-map/bloom pruning sees physical attribute
-    // names — the same identities the commit's stats job recorded.
+    // names — the same identities the commit's write recorded.
     val cm = r.colMap
     import org.apache.spark.sql.functions.col
     if (partCols.isEmpty) {
@@ -545,7 +546,8 @@ object TxLogFileIndex {
       val logical = r.schema.getOrElse {
         if (cm.nonEmpty) throw new IllegalStateException(
           s"txlog: $root has a column mapping but no recorded schema")
-        spark.read.option("mergeSchema", "true").parquet(abs: _*).schema
+        spark.read.option("mergeSchema", "true")
+          .parquet(abs.map(TxLog.literalPath): _*).schema
       }
       val physSchema =
         if (cm.isEmpty) logical
@@ -662,7 +664,7 @@ object TxLogFileIndex {
 
   /** Unsigned byte-wise compare — EXACTLY Spark's own string ordering
     * (UTF8String compares UTF-8 bytes unsigned), so the pruning decision
-    * and the min/max the commit's stats job computed agree; Java's
+    * and the min/max the commit's write recorded agree; Java's
     * String.compareTo (UTF-16 code units) would disagree on
     * supplementary characters.
     */

@@ -2187,7 +2187,7 @@ private[graft] object Shard10 {
     // [min, max] spans essentially the whole table and zone maps prune
     // NOTHING for a point lookup — the secondary-key shape (Delta's
     // bloom index / Parquet bloom design point). Each commit builds a
-    // sidecar bitset per file inside the SAME single stats job, and the
+    // sidecar bitset per file in the same job that writes it, and the
     // plain snapshot().filter(doc_id IN ...) consults them at plan time,
     // opening only files that can hold the probed ids. TxLogBloomSpec
     // asserts the planned file set and the sidecar-read bound; this
@@ -2325,8 +2325,8 @@ private[graft] object Shard10 {
         .orderBy("o_orderpriority")
     }),
 
-    // metadata-only COUNT(*): per-file row counts ride the commit's
-    // stats job (Delta's numRecords) and the DV ops maintain per-file
+    // metadata-only COUNT(*): per-file row counts are recorded by the
+    // commit's write (Delta's numRecords) and the DV ops maintain per-file
     // deleted counts, so rowCount answers from the LOG alone — the API
     // takes no SparkSession, which is the proof no data file or footer
     // is touched (at 100 TB: an instant answer vs a full scan). The

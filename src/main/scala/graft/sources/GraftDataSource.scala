@@ -195,7 +195,8 @@ object GraftDataSource {
       parameters: Map[String, String]): BaseRelation = {
     val v = version.getOrElse(TxLog.headVersion(root))
     val r = TxLog.replay(root, v)
-    require(r.files.nonEmpty, s"txlog: snapshot v$v of $root lists no files")
+    require(r.files.nonEmpty || r.schema.nonEmpty,
+      s"txlog: snapshot v$v of $root lists no files")
     TxLogFileIndex.bareRelation(spark, root, r)
       .map { h =>
         val idx = h.location.asInstanceOf[TxLogFileIndex].insertGuarded

@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** Metadata-only COUNT(*): row counts recorded by the commit's stats job
-  * and deleted-position counts maintained by the DV ops let `rowCount`
+/** Metadata-only COUNT(*): row counts recorded by the commit's write as
+  * its rows stream out, and deleted-position counts kept by the one
+  * deletion-vector skeleton behind DELETE and UPDATE, let `rowCount`
   * answer from the log alone — its signature takes no SparkSession,
   * which IS the proof no data is scanned. Degrades to None (never a
   * wrong number) when any live entry predates counting.
@@ -52,7 +53,7 @@ class TxLogRowCountSpec extends AnyFunSuite {
     val root = Zones.tempDir("txrcn")
     TxLog.commit(spark, root, batch(0, 50), TxLog.Append, statsCols = Seq("id"))
     assert(TxLog.rowCount(root) === Some(50L))
-    TxLog.append(spark, root, batch(50, 60)) // counts ride the stats job free
+    TxLog.append(spark, root, batch(50, 60)) // counts ride the write free
     assert(TxLog.rowCount(root) === Some(60L))
     assert(TxLog.snapshot(spark, root).count() === 60L)
   }

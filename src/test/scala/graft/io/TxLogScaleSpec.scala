@@ -65,7 +65,7 @@ class TxLogScaleSpec extends AnyFunSuite {
     val deadline = System.nanoTime() + 10_000_000_000L
     while (jobs() == 0 && System.nanoTime() < deadline) Thread.sleep(50)
     val n = jobs()
-    // the write (plus its range-sampling pass) and ONE grouped stats job
+    // the write (plus its range-sampling pass), which records the stats
     // — a fixed handful regardless of file count. Round 7 launched one
     // stats job PER FILE: this 16-file commit would be ≥ 17 jobs, a
     // 1,000-file commit 1,000 sequential driver round-trips
@@ -131,6 +131,76 @@ class TxLogScaleSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1))).toMap
     assert(now.size === 401)
     assert(now(150L) === "U-150" && now(250L) === "U-250" && now(5000L) === "NEW-5000")
+  }
+
+  /** Four one-file commits of ids [0, 400) with `id` zone maps. */
+  private def fourFiles(): String = {
+    val root = freshTable()
+    (0 until 4).foreach(k => TxLog.commit(spark, root,
+      batch(k * 100, k * 100 + 100).coalesce(1), TxLog.Append, statsCols = Seq("id")))
+    root
+  }
+
+  /** `body` against `root` registered as a SQL table of a DML session. */
+  private def withSqlTable[T](root: String)(body: (org.apache.spark.sql.SparkSession, String) => T): T = {
+    val s2 = graft.sources.GraftSession.withDml(spark)
+    val tbl = s"txlog_jobs_${java.util.UUID.randomUUID().toString.take(8)}"
+    s2.sql(s"CREATE TABLE $tbl USING graft LOCATION '$root'")
+    try body(s2, tbl) finally s2.sql(s"DROP TABLE IF EXISTS $tbl")
+  }
+
+  test("an append with zone maps and a bloom index starts exactly one Spark job") {
+    val root = freshTable()
+    val df = spark.range(0, 400, 1, 4)
+      .select(col("id"), concat(lit("row-"), col("id")).as("payload"))
+    val (_, jobs) = TestSpark.jobsStartedBy(
+      TxLog.append(spark, root, df, Seq("id", "payload"), Map("id" -> 100L)))
+    // the write, which records counts, zone maps and bitsets as it goes
+    assert(jobs === 1, s"an indexed append started $jobs Spark jobs")
+    val r = TxLog.replay(root, 1L)
+    assert(r.entries.size === 4)
+    assert(r.entries.forall(e => e.stats.contains("id") &&
+      e.strStats.contains("payload") && e.blooms.contains("id")))
+    assert(TxLog.rowCount(root) === Some(400L))
+  }
+
+  test("SQL DELETE on a table without deletion vectors starts at most 3 Spark jobs") {
+    val root = fourFiles()
+    val (_, jobs) = withSqlTable(root) { (s2, tbl) =>
+      TestSpark.jobsStartedBy(
+        s2.sql(s"DELETE FROM $tbl WHERE id >= 150 AND id <= 249").head().getLong(0))
+    }
+    // one pass that fills the matched-row cache and counts per file, the
+    // positions' write and the change rows' write
+    assert(jobs <= 3, s"one SQL DELETE started $jobs Spark jobs")
+    assert(TxLog.snapshot(spark, root).count() === 300L)
+    assert(TxLog.rowCount(root) === Some(300L))
+    assert(TxLog.changes(spark, root, 4L, 5L, withChangeType = true)
+      .filter(col("_change_type") === "delete").count() === 100L)
+  }
+
+  test("SQL UPDATE starts at most 4 Spark jobs") {
+    val root = fourFiles()
+    val (_, jobs) = withSqlTable(root) { (s2, tbl) =>
+      TestSpark.jobsStartedBy(
+        s2.sql(s"UPDATE $tbl SET payload = 'u' WHERE id >= 150 AND id <= 249").head().getLong(0))
+    }
+    // the DELETE's three, plus the post-images' commit
+    assert(jobs <= 4, s"one SQL UPDATE started $jobs Spark jobs")
+    val now = TxLog.snapshot(spark, root).collect()
+      .map(x => x.getLong(0) -> x.getString(1)).toMap
+    assert(now.size === 400 && now(150L) === "u" && now(249L) === "u" && now(250L) === "row-250")
+  }
+
+  test("optimize of a table with deletion vectors starts at most 4 Spark jobs") {
+    val root = fourFiles()
+    TxLog.deleteVectors(spark, root, col("id") % 10 === 3)
+    val (_, jobs) = TestSpark.jobsStartedBy(
+      TxLog.optimize(spark, root, targetFiles = 2, sortCol = Some("id")))
+    // the vector's broadcast, the range sample, the shuffle and the write
+    assert(jobs <= 4, s"one optimize started $jobs Spark jobs")
+    assert(TxLog.snapshot(spark, root).count() === 360L)
+    assert(TxLog.replay(root, TxLog.headVersion(root)).entries.forall(_.dvs.isEmpty))
   }
 
   test("plain snapshot().filter(...) prunes files at plan time via the file index") {

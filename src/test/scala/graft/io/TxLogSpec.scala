@@ -452,4 +452,42 @@ class TxLogSpec extends AnyFunSuite {
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$root/data/txn-aborted0001")))
     assert(TxLog.snapshot(spark, root).count() === 5L, "published data must survive")
   }
+
+  test("a copy-on-write delete that empties a file leaves no zero-row entry for merges to rewrite") {
+    import spark.implicits._
+    val root = freshTable()
+    // four one-file commits with disjoint id zone maps: [0, 100), ..., [300, 400)
+    (0 until 4).foreach(k => TxLog.commit(spark, root,
+      batch(k * 100, k * 100 + 100).coalesce(1), TxLog.Append, statsCols = Seq("id")))
+    // the delete's only input file is [0, 100), and it deletes every row
+    TxLog.delete(spark, root, col("id") < 100, statsCols = Seq("id"))
+    val r = TxLog.replay(root, TxLog.headVersion(root))
+    assert(r.entries.size === 3 && r.entries.forall(_.rows.exists(_ > 0L)),
+      s"live entries after the emptying delete: ${r.entries}")
+    val before = TxLog.liveFiles(root, TxLog.headVersion(root)).toSet
+    TxLog.merge(spark, root, Seq((250L, "U-250")).toDF("id", "payload"), "id")
+    val after = TxLog.liveFiles(root, TxLog.headVersion(root)).toSet
+    assert((before -- after).size === 1,
+      s"the merge of key 250 rewrote ${(before -- after).toSeq.sorted}")
+    val now = TxLog.snapshot(spark, root).collect()
+      .map(x => x.getLong(0) -> x.getString(1)).toMap
+    assert(now.size === 300 && now(250L) === "U-250" && !now.contains(50L))
+  }
+
+  test("a table root holding a backslash reads back exactly: append, vector delete, update, changes") {
+    val root = s"${Zones.tempDir("txbs")}/a\\b"
+    TxLog.append(spark, root, batch(0, 10))
+    TxLog.deleteVectors(spark, root, col("id") === 3L)
+    TxLog.update(spark, root, col("id") === 5L, Map("payload" -> lit("U")))
+    val got = TxLog.snapshot(spark, root).collect()
+      .map(x => x.getLong(0) -> x.getString(1)).toMap
+    assert(got === (0 until 10).filter(_ != 3)
+      .map(i => i.toLong -> (if (i == 5) "U" else s"row-$i")).toMap)
+    val byType = TxLog.changes(spark, root, 0L, TxLog.headVersion(root),
+        withChangeType = true)
+      .groupBy("_change_type").count().collect()
+      .map(x => x.getString(0) -> x.getLong(1)).toMap
+    assert(byType === Map("insert" -> 10L, "delete" -> 1L,
+      "update_preimage" -> 1L, "update_postimage" -> 1L))
+  }
 }

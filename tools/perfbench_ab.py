@@ -2,7 +2,7 @@
 """A/B the repository benchmark: a git revision against the working tree.
 
     python3 tools/perfbench_ab.py [--rev HEAD] [--workload lakehouse] \
-        [--seeds 1,2,3,4,5] [--seconds 10] [--trace]
+        [--seeds 1,2,3,4,5,6,7,8,9,10] [--seconds 10] [--trace]
 
 Exports `--rev` (default HEAD) with `git archive` into a temporary
 directory, then runs `perfbench/run.py` there ("parent") and in the
@@ -13,7 +13,10 @@ both sides with the change in percent and how many seed pairs moved the
 better way, then the per-operation medians the runs log on stderr.
 Each end-to-end metric also shows its `bound` from BENCHMARK.json, the
 parent's quartile spread (IQR / median), and `WORSE>bound` when the
-change's median is worse than the parent's by more than that bound.
+change's median is worse than the parent's by more than that bound, or
+`GAIN` when the change is better in at least 9 of 10 seed pairs and its
+median is better than the parent's by more than the parent's IQR — the
+bar a claimed gain must clear.
 With `--trace`, both sides run with `--trace 1`, which reports the
 per-layer metrics (`pipeline.preprocess_s`, `spark.stages`, ...) in place
 of the end-to-end ones; the same table then compares those.
@@ -63,15 +66,19 @@ def pct(a, b):
     return (b - a) / a * 100 if a else float("nan")
 
 
-def bound_check(parent_vals, p_med, c_med, sign, bound):
-    """Bound, the parent's IQR/median, and the WORSE>bound flag."""
+def bound_check(parent_vals, p_med, c_med, sign, bound, wins, pairs):
+    """Bound, the parent's IQR/median, and the WORSE>bound or GAIN flag."""
     if len(parent_vals) >= 2:
         q1, _, q3 = statistics.quantiles(parent_vals, n=4, method="inclusive")
     else:
         q1 = q3 = p_med
     spread = (q3 - q1) / p_med if p_med else float("nan")
     worse = -sign * (c_med - p_med) / p_med if p_med else 0.0
-    flag = "  WORSE>bound" if worse > bound else ""
+    flag = ""
+    if worse > bound:
+        flag = "  WORSE>bound"
+    elif wins >= 0.9 * pairs and sign * (c_med - p_med) > q3 - q1:
+        flag = "  GAIN"
     return f"  bound {bound:.0%}  parent IQR/median {spread:6.1%}{flag}"
 
 
@@ -80,7 +87,7 @@ def main():
     ap.add_argument("--rev", default="HEAD", help="git revision to compare against")
     ap.add_argument("--workload", action="append", choices=["batch", "lakehouse"],
                     help="repeatable; default: both")
-    ap.add_argument("--seeds", default="1,2,3,4,5", help="comma-separated seeds")
+    ap.add_argument("--seeds", default="1,2,3,4,5,6,7,8,9,10", help="comma-separated seeds")
     ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--trace", action="store_true",
                     help="run both sides with --trace 1 and compare the per-layer metrics")
@@ -119,7 +126,8 @@ def main():
                     continue
                 sign = -1 if better.get(k) == "lower" else 1
                 wins = sum(1 for x, y in zip(pm, cm) if sign * (y[k] - x[k]) > 0)
-                check = (bound_check([r[k] for r in pm], p_med, c_med, sign, bounds[k])
+                check = (bound_check([r[k] for r in pm], p_med, c_med, sign, bounds[k],
+                                     wins, len(seeds))
                          if k in bounds else "")
                 print(f"{k:30s} parent {p_med:10.4g}  change {c_med:10.4g}  "
                       f"{pct(p_med, c_med):+7.1f}%  better in {wins}/{len(seeds)} pairs{check}")
