@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.util.matching.Regex
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, expr, input_file_name, lit, max, min, when}
 import org.apache.spark.storage.StorageLevel
@@ -754,14 +754,14 @@ object TxLog {
       .map(m => s"data/txn-$txn/${m.relPath}" -> m.size)
       .toMap
     val written = filled.map(f => s"data/txn-$txn/${f.rel}" -> f).sortBy(_._1)
-    // CHECK constraints: a read-back scan of the commit's OWN files —
-    // proportional to the commit, never to the table (carried files were
-    // validated when written, and [[addConstraint]] validates the whole
-    // table once at add time). The `_constraints` marker keeps
-    // constraint-free tables at ZERO extra replay on the append hot
-    // path; with it present the lookup is checkpoint-bounded. SQL CHECK
-    // semantics: a row fails only when the expression is provably FALSE
-    // (NULL passes).
+    // CHECK constraints: a read-back scan of the commit's OWN files, by
+    // name (its dir also holds bloom sidecars) — proportional to the
+    // commit, never to the table (carried files were validated when
+    // written, and [[addConstraint]] validates the whole table once at
+    // add time). The `_constraints` marker keeps constraint-free tables
+    // at ZERO extra replay on the append hot path; with it present the
+    // lookup is checkpoint-bounded. SQL CHECK semantics: a row fails only
+    // when the expression is provably FALSE (NULL passes).
     def validateConstraints(cons: Map[String, String]): Unit =
       if (cons.nonEmpty) {
         // read back physical, alias to logical — constraint expressions
@@ -769,7 +769,8 @@ object TxLog {
         val backPhys = spark.read
           .schema(deepNullable(physDf.schema)
             .asInstanceOf[org.apache.spark.sql.types.StructType])
-          .parquet(literalPath(dataDir))
+          .option("basePath", dataDir)
+          .parquet(written.map { case (p, _) => literalPath(s"$root/$p") }: _*)
         val back =
           if (effMap.isEmpty) backPhys
           else backPhys.select(df.columns.toSeq.map(c =>
@@ -1706,35 +1707,98 @@ object TxLog {
     * DELETE semantics). The deleted rows persist as `delete`-typed
     * change rows, so `changes(withChangeType = true)` and a changeTypes
     * stream read straight through the rewrite. The predicate must be
-    * deterministic — it is evaluated twice (keep-set and preimages).
-    * Serializable read-modify-write like merge. Returns the committed
-    * version, or the head untouched when no file can match.
+    * deterministic — it is evaluated twice (change rows and survivors).
+    * Returns the committed version, or the head untouched when no file
+    * can match. See [[rewriteDml]] for the jobs it runs.
     */
   def delete(
       spark: SparkSession,
       root: String,
       predicate: org.apache.spark.sql.Column,
+      statsCols: Seq[String] = Nil): Long =
+    rewriteDml(spark, root, predicate, Map.empty, statsCols)
+
+  /** Copy-on-write UPDATE: apply the SET assignments to the rows
+    * matching `predicate`, rewriting only the files that can contain a
+    * match (as [[delete]]). SQL UPDATE semantics throughout: every SET
+    * right-hand side evaluates against the OLD row (so `SET a = b, b = a`
+    * swaps), a NULL predicate leaves the row untouched, and assignments
+    * must target existing columns (evolution goes through merge).
+    * Pre/post images persist as change rows. Rows of a touched file that
+    * don't match are rewritten verbatim; updating a hive partition column
+    * re-lands each row in its new k=v dir.
+    */
+  def update(
+      spark: SparkSession,
+      root: String,
+      predicate: org.apache.spark.sql.Column,
+      set: Map[String, org.apache.spark.sql.Column],
       statsCols: Seq[String] = Nil): Long = {
-    import org.apache.spark.sql.functions.{coalesce, not}
-    readModifyWrite(root, "delete") { (base, r) =>
+    require(set.nonEmpty, "txlog: UPDATE needs at least one SET assignment")
+    rewriteDml(spark, root, predicate, set, statsCols)
+  }
+
+  /** The copy-on-write DML skeleton behind [[delete]] (`set` empty) and
+    * [[update]], a serializable read-modify-write like merge: candidates
+    * by plan-time pruning (no job; none is a no-op), the NULL-safe hit
+    * `coalesce(predicate, false)`, then two write jobs with no persist and
+    * no count pass — the change rows, and the commit of the survivors or
+    * of the candidates with the SET values applied to the hits (each
+    * read against the OLD row: one projection), every other file carried
+    * by reference.
+    */
+  private def rewriteDml(spark: SparkSession, root: String, predicate: Column,
+      set: Map[String, Column], statsCols: Seq[String]): Long = {
+    val op = if (set.isEmpty) "DELETE" else "UPDATE"
+    readModifyWrite(root, op.toLowerCase) { (base, r) =>
       val touched = candidateEntries(spark, root, r, predicate)
       if (touched.isEmpty) base // provably no matching row anywhere: no-op
       else {
-        val untouched = r.entries.diff(touched)
         val old = TxLogFileIndex.read(spark, root, r.copy(entries = touched))
-        // NULL predicate ⇒ not deleted: both branches coalesce to false
-        val hit = coalesce(predicate, lit(false))
-        val cdfDir = s"txn-${java.util.UUID.randomUUID().toString.take(12)}"
-        toPhysical(old.filter(hit).withColumn("_change_type", lit("delete")), r)
-          .write.mode(SaveMode.ErrorIfExists)
-          .parquet(s"$root/_change_data/$cdfDir")
-        commit(spark, root, old.filter(not(hit)), Overwrite,
-          statsCols = statsCols, carry = untouched, carrySchema = r.schema,
-          expectHead = Some(base), cdf = Some(cdfDir),
-          partitionBy = layoutOf(root, r), op = Some("DELETE"))
+        val dataCols = old.columns.toSeq
+        requireSetTargets(set, dataCols)
+        val hit = org.apache.spark.sql.functions.coalesce(predicate, lit(false))
+        val cdfDir = writeDmlChanges(root, r, old.filter(hit), dataCols, set)
+        commit(spark, root,
+          if (set.isEmpty) old.filter(!hit)
+          else old.select(dataCols.map(c =>
+            set.get(c).fold(named(c))(e => when(hit, e).otherwise(named(c)).as(c))): _*),
+          Overwrite, statsCols = statsCols, carry = r.entries.diff(touched),
+          carrySchema = r.schema, expectHead = Some(base), cdf = Some(cdfDir),
+          partitionBy = layoutOf(root, r), op = Some(op))
       }
     }
   }
+
+  private def requireSetTargets(set: Map[String, Column], dataCols: Seq[String]): Unit =
+    require(set.keySet.subsetOf(dataCols.toSet), "txlog: UPDATE SET targets " +
+      s"unknown columns ${(set.keySet -- dataCols).mkString(", ")}")
+
+  /** One write job: the change rows of a DML's matched rows `hits` — a
+    * `delete` row each, or with `set` an update pre- and post-image.
+    * Returns the new `_change_data` dir name.
+    */
+  private def writeDmlChanges(root: String, r: Replay, hits: DataFrame,
+      dataCols: Seq[String], set: Map[String, Column]): String = {
+    val old = hits.select(dataCols.map(named): _*)
+    val changes =
+      if (set.isEmpty) old.withColumn("_change_type", lit("delete"))
+      else old.withColumn("_change_type", lit("update_preimage")).unionByName(
+        postImages(hits, dataCols, set).withColumn("_change_type", lit("update_postimage")))
+    val cdfDir = s"txn-${java.util.UUID.randomUUID().toString.take(12)}"
+    toPhysical(changes, r).write.mode(SaveMode.ErrorIfExists)
+      .parquet(s"$root/_change_data/$cdfDir")
+    cdfDir
+  }
+
+  /** `dataCols` of `hits` with each SET value applied to the OLD row. */
+  private def postImages(
+      hits: DataFrame, dataCols: Seq[String], set: Map[String, Column]): DataFrame =
+    hits.select(dataCols.map(c => set.get(c).fold(named(c))(_.as(c))): _*)
+
+  /** The column named exactly `c`: `col` would parse `a.b` as a path. */
+  private def named(c: String): Column = org.apache.spark.sql.GraftColumnBridge.column(
+    org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(Seq(c)))
 
   /** Merge-on-read DELETE via deletion vectors: instead of rewriting
     * every file that holds a matching row ([[delete]]'s copy-on-write,
@@ -1829,9 +1893,7 @@ object TxLog {
         val tagged = TxLogFileIndex.readTagged(spark, root,
           r.copy(entries = touched))
         val dataCols = tagged.columns.toSeq.filterNot(c => c == FpCol || c == PosCol)
-        val unknown = set.keySet -- dataCols.toSet
-        require(unknown.isEmpty,
-          s"txlog: UPDATE SET targets unknown columns ${unknown.mkString(", ")}")
+        requireSetTargets(set, dataCols)
         val manifestPath = typedLit(touched.map(e =>
           TxLogFileIndex.pathTail(e.path) -> e.path).toMap)
         val matched = tagged.filter(coalesce(predicate, lit(false)))
@@ -1847,27 +1909,14 @@ object TxLog {
                 val p = row.getUTF8String(0).toString
                 n(p) = n.getOrElse(p, 0L) + 1L
               }
-              Iterator.single(n.toMap)
-            }.collect()
-            .foldLeft(Map.empty[String, Long]) { (acc, m) =>
-              m.foldLeft(acc) { case (a, (p, k)) => a.updated(p, a.getOrElse(p, 0L) + k) }
-            }
+              n.iterator
+            }.collect().groupMapReduce(_._1)(_._2)(_ + _)
           if (hits.isEmpty) base
           else {
             val dvDir = s"_dv/txn-${java.util.UUID.randomUUID().toString.take(12)}"
             matched.select(col(FpCol).as("p"), col(PosCol).as("pos"))
               .write.mode(SaveMode.ErrorIfExists).parquet(s"$root/$dvDir")
-            val old = matched.select(dataCols.map(col): _*)
-            // every SET right-hand side reads the old row
-            val post = matched.select(dataCols.map(c =>
-              set.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-            val cdfDir = s"txn-${java.util.UUID.randomUUID().toString.take(12)}"
-            toPhysical(
-              if (set.isEmpty) old.withColumn("_change_type", lit("delete"))
-              else old.withColumn("_change_type", lit("update_preimage"))
-                .unionByName(post.withColumn("_change_type", lit("update_postimage"))), r)
-              .write.mode(SaveMode.ErrorIfExists)
-              .parquet(s"$root/_change_data/$cdfDir")
+            val cdfDir = writeDmlChanges(root, r, matched, dataCols, set)
             val entries = r.entries.map(e => hits.get(e.path) match {
               case Some(n) => e.copy(dvs = e.dvs :+ dvDir, dvRows = e.dvRows + n)
               case None    => e
@@ -1883,7 +1932,7 @@ object TxLog {
                 op = Some(op), dvb = dvb, touched = hits.keySet,
                 rebaseDvTouched = Some(hits.keySet))
             else
-              commit(spark, root, post, Overwrite,
+              commit(spark, root, postImages(matched, dataCols, set), Overwrite,
                 statsCols = statsCols, carry = entries, carrySchema = r.schema,
                 expectHead = Some(base), cdf = Some(cdfDir),
                 partitionBy = layoutOf(root, r), op = Some(op),
@@ -1895,19 +1944,17 @@ object TxLog {
     }
   }
 
-  private def splitAnds(
-      e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = e match {
-    case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-      splitAnds(l) ++ splitAnds(r)
-    case other => Seq(other)
+  private object Conjuncts extends org.apache.spark.sql.catalyst.expressions.PredicateHelper {
+    def of(e: org.apache.spark.sql.catalyst.expressions.Expression) = splitConjunctivePredicates(e)
   }
 
   /** Plan-time candidate selection for predicate-driven rewrites
     * (delete/update): run the predicate's optimized conjuncts through
     * the snapshot's own index pruning — zone maps AND partition dirs —
     * with zero jobs and zero footer reads, returning the entries that
-    * could hold a matching row.
+    * could hold a matching row. Only conjuncts over the snapshot's own
+    * columns count: a filter inside a subquery's plan (`s.k > 100` in
+    * `k IN (SELECT …)`) says nothing about this table's files.
     */
   private def candidateEntries(
       spark: SparkSession,
@@ -1921,12 +1968,15 @@ object TxLog {
     if (r.entries.map(e => TxLogFileIndex.layoutOfPath(e.path)).distinct.size != 1)
       return r.entries
     val snap = TxLogFileIndex.read(spark, root, r)
+    val target = TxLogFileIndex.relationOf(snap)
     val index = TxLogFileIndex.of(snap)
     val conjuncts = snap.filter(predicate).queryExecution.optimizedPlan
       .collect {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          splitAnds(f.condition)
+          Conjuncts.of(f.condition)
       }.flatten
+      .filter(e => e.references.subsetOf(target.outputSet) &&
+        !org.apache.spark.sql.catalyst.expressions.SubqueryExpression.hasSubquery(e))
     val partCols = index.partitionSchema.fieldNames.toSet
     val (pf, df) = conjuncts.partition(e =>
       e.references.nonEmpty && e.references.forall(a => partCols(a.name)))
@@ -1934,58 +1984,6 @@ object TxLog {
     val kept = index.lastListed.toSet
     r.entries.filter(e =>
       kept(TxLogFileIndex.canonKey(absPath(root, e.path))))
-  }
-
-  /** Copy-on-write UPDATE: apply the SET assignments to the rows
-    * matching `predicate`, rewriting only the files that can contain a
-    * match (same plan-time candidate selection as [[delete]]). SQL
-    * UPDATE semantics throughout: every SET right-hand side evaluates
-    * against the OLD row (so `SET a = b, b = a` swaps), a NULL predicate
-    * leaves the row untouched, and assignments must target existing
-    * columns (evolution goes through merge). Pre/post images persist as
-    * change rows, so the typed CDF reads through the rewrite. Rows of a
-    * touched file that don't match are rewritten verbatim. Updating a
-    * hive partition column is fine — the rewrite re-lands each row in
-    * its new k=v dir. Returns the committed version, or the head
-    * untouched when no file can match.
-    */
-  def update(
-      spark: SparkSession,
-      root: String,
-      predicate: org.apache.spark.sql.Column,
-      set: Map[String, org.apache.spark.sql.Column],
-      statsCols: Seq[String] = Nil): Long = {
-    import org.apache.spark.sql.functions.coalesce
-    require(set.nonEmpty, "txlog: UPDATE needs at least one SET assignment")
-    readModifyWrite(root, "update") { (base, r) =>
-      val touched = candidateEntries(spark, root, r, predicate)
-      if (touched.isEmpty) base // provably no matching row anywhere: no-op
-      else {
-        val untouched = r.entries.diff(touched)
-        val old = TxLogFileIndex.read(spark, root, r.copy(entries = touched))
-        val unknown = set.keySet -- old.columns.toSet
-        require(unknown.isEmpty,
-          s"txlog: UPDATE SET targets unknown columns ${unknown.mkString(", ")}")
-        // materialize the hit flag FIRST so every assignment and both
-        // change images evaluate against the old row, even when the
-        // predicate or a RHS references a column another assignment changes
-        val flagged = old.withColumn("__hit", coalesce(predicate, lit(false)))
-        val newCols = old.columns.toSeq.map(c => set.get(c)
-          .map(e => when(col("__hit"), e).otherwise(col(c)).as(c))
-          .getOrElse(col(c)))
-        val cdfDir = s"txn-${java.util.UUID.randomUUID().toString.take(12)}"
-        toPhysical(flagged.filter(col("__hit")).drop("__hit")
-          .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(flagged.filter(col("__hit")).select(newCols: _*)
-            .withColumn("_change_type", lit("update_postimage"))), r)
-          .write.mode(SaveMode.ErrorIfExists)
-          .parquet(s"$root/_change_data/$cdfDir")
-        commit(spark, root, flagged.select(newCols: _*), Overwrite,
-          statsCols = statsCols, carry = untouched, carrySchema = r.schema,
-          expectHead = Some(base), cdf = Some(cdfDir),
-          partitionBy = layoutOf(root, r), op = Some("UPDATE"))
-      }
-    }
   }
 
   /** OPTIMIZE ZORDER: rewrite the live set clustered along the Morton

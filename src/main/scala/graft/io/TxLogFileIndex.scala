@@ -322,11 +322,16 @@ object TxLogFileIndex {
     * asserting that frame's pruning via its own `lastListed`).
     */
   def of(df: DataFrame): TxLogFileIndex =
+    relationOf(df).relation.asInstanceOf[HadoopFsRelation]
+      .location.asInstanceOf[TxLogFileIndex]
+
+  /** The relation node a snapshot DataFrame plans through. */
+  private[io] def relationOf(df: DataFrame)
+      : org.apache.spark.sql.execution.datasources.LogicalRelation =
     df.queryExecution.logical.collectFirst {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation
           if l.relation.isInstanceOf[HadoopFsRelation] &&
-            l.relation.asInstanceOf[HadoopFsRelation].location.isInstanceOf[TxLogFileIndex] =>
-        l.relation.asInstanceOf[HadoopFsRelation].location.asInstanceOf[TxLogFileIndex]
+            l.relation.asInstanceOf[HadoopFsRelation].location.isInstanceOf[TxLogFileIndex] => l
     }.getOrElse(throw new IllegalArgumentException(
       "not a TxLog.snapshot-derived DataFrame"))
 
@@ -334,48 +339,29 @@ object TxLogFileIndex {
     * `CatalogStatistics` FROM THE LOG: the live-fraction-scaled
     * sizeInBytes the index already estimates, plus the EXACT live row
     * count from the manifest row-count ledger (`Σ rows − dvRows`, the
-    * q658 path) — so cost-based planning (`spark.sql.cbo.enabled` /
-    * `spark.sql.statistics.planStats.enabled`) sees log-exact
-    * cardinality with zero data reads, fixing join-order estimates
-    * that bytes alone get wrong (deletion-vector-heavy tables look big
-    * in bytes while being small in rows). Counts are LIVE rows — the
-    * post-DV-subtraction cardinality downstream operators actually see
-    * — matching the sizeInBytes convention. The two private hops
-    * (`LogicalRelation.apply(rel, table)`, `Dataset.ofRows`) go through
-    * reflection to stay out of Spark's namespace (the
-    * TxLogSource.asStreamingFrame stance); any failure falls back to
-    * the public stats-less constructor, losing only the estimate.
+    * q658 path) — so cost-based planning sees log-exact cardinality with
+    * zero data reads (deletion-vector-heavy tables look big in bytes
+    * while being small in rows). Built through
+    * [[org.apache.spark.sql.GraftPlanBridge]]: one path, and every
+    * snapshot carries its stats.
     */
   private def ofRelationWithStats(
       spark: SparkSession,
       rel: HadoopFsRelation,
       rowCount: Option[Long],
-      sizeInBytes: Long): DataFrame =
-    try {
-      import org.apache.spark.sql.catalyst.TableIdentifier
-      import org.apache.spark.sql.catalyst.catalog.{CatalogStatistics, CatalogStorageFormat, CatalogTable, CatalogTableType}
-      val tbl = CatalogTable(
-        identifier = TableIdentifier("txlog_snapshot"),
-        tableType = CatalogTableType.EXTERNAL,
-        storage = CatalogStorageFormat.empty,
-        schema = rel.schema,
-        provider = Some("parquet"),
-        stats = Some(CatalogStatistics(
-          BigInt(math.max(1L, sizeInBytes)), rowCount.map(BigInt(_)))))
-      val lrMod = Class.forName(
-        "org.apache.spark.sql.execution.datasources.LogicalRelation$")
-      val lr = lrMod.getField("MODULE$").get(null)
-      val plan = lrMod.getMethod("apply",
-        classOf[org.apache.spark.sql.sources.BaseRelation],
-        classOf[CatalogTable]).invoke(lr, rel, tbl)
-      val dsMod = Class.forName("org.apache.spark.sql.classic.Dataset$")
-      val ds = dsMod.getField("MODULE$").get(null)
-      val ofRows = dsMod.getMethods.find(m =>
-        m.getName == "ofRows" && m.getParameterCount == 2).get
-      ofRows.invoke(ds, spark, plan).asInstanceOf[DataFrame]
-    } catch {
-      case scala.util.control.NonFatal(_) => spark.baseRelationToDataFrame(rel)
-    }
+      sizeInBytes: Long): DataFrame = {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    import org.apache.spark.sql.catalyst.catalog.{CatalogStatistics, CatalogStorageFormat, CatalogTable, CatalogTableType}
+    val tbl = CatalogTable(
+      identifier = TableIdentifier("txlog_snapshot"),
+      tableType = CatalogTableType.EXTERNAL,
+      storage = CatalogStorageFormat.empty,
+      schema = rel.schema,
+      provider = Some("parquet"),
+      stats = Some(CatalogStatistics(
+        BigInt(math.max(1L, sizeInBytes)), rowCount.map(BigInt(_)))))
+    org.apache.spark.sql.GraftPlanBridge.ofRelation(spark, rel, tbl)
+  }
 
   /** Exact LIVE row count of a replay subset from the ledger — `None`
     * (no estimate) when any entry predates row-count recording.

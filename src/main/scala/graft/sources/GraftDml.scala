@@ -3,14 +3,16 @@ package graft.sources
 import scala.util.control.NonFatal
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, GraftPlanBridge, Row,
+  SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference,
   CommonExpressionRef, Expression, RuntimeReplaceable, SubqueryExpression, With}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.functions.{col, expr, lit}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{LongType, StructField}
 
 import graft.io.{TxLog, TxLogFileIndex}
@@ -47,31 +49,32 @@ class GraftDmlExtensions extends (SparkSessionExtensions => Unit) {
   }
 }
 
-/** The analysis-time rewrite (see [[GraftDmlExtensions]]). Conditions
-  * and SET values are re-rendered to SQL text and re-resolved against
-  * the fresh snapshot each API plans internally — attribute identities
-  * from THIS statement's relation instance would not resolve there.
+/** The analysis-time rewrite (see [[GraftDmlExtensions]]). DELETE and
+  * UPDATE hand the row-level APIs the statement's resolved condition and
+  * SET values re-bound by column name ([[GraftDml.rebind]]) to the fresh
+  * snapshot each API reads — no SQL text, so uncorrelated subqueries pass
+  * as the plans the analyzer resolved. A correlated one is refused: its
+  * outer references sit inside the subquery plan, out of rebind's reach.
   */
 final class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
   import GraftDml._
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperators {
     case DeleteFromTable(GraftTarget(root), cond) if cond.resolved =>
-      refuseSubqueries("DELETE", Seq(cond))
-      GraftDeleteCommand(root, renderSql(cond))
+      GraftDeleteCommand(root, rebound("DELETE", cond))
 
     case UpdateTable(GraftTarget(root), assignments, cond)
         if assignments.forall(a => a.key.resolved && a.value.resolved) &&
           cond.forall(_.resolved) =>
-      refuseSubqueries("UPDATE", cond.toSeq ++ assignments.map(_.value))
       val set = assignments.map { a =>
         val name = a.key match {
           case ar: AttributeReference => ar.name
-          case other => stripBackticks(other.sql)
+          case other => fail(s"UPDATE SET targets ${other.sql}, not a top-level column")
         }
-        name -> renderSql(a.value)
+        name -> rebound("UPDATE", a.value)
       }
-      GraftUpdateCommand(root, set, cond.map(renderSql).getOrElse("true"))
+      GraftUpdateCommand(root, set,
+        cond.map(rebound("UPDATE", _)).getOrElse(lit(true)))
 
     // matched BEFORE condition/action resolution: Spark's analyzer
     // expands star actions and resolves merge conditions only for V2
@@ -125,8 +128,7 @@ final class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
   private def equiKeyOf(cond: Expression): Option[String] = {
     def nameOf(e: Expression): Option[String] = e match {
       case a: AttributeReference => Some(a.name)
-      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-        Some(u.nameParts.last)
+      case u: UnresolvedAttribute => Some(u.nameParts.last)
       case _ => None
     }
     cond match {
@@ -136,13 +138,11 @@ final class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** Conditions and SET values travel to the row-level APIs as SQL text,
-    * and a rendered subquery does not parse back there.
-    */
-  private def refuseSubqueries(stmt: String, es: Seq[Expression]): Unit =
-    if (es.exists(SubqueryExpression.hasSubquery))
-      fail(s"$stmt on a graft table does not support subqueries in its " +
-        "condition or SET values")
+  private def rebound(stmt: String, e: Expression): Column = {
+    e.collectFirst { case s: SubqueryExpression if s.isCorrelated => s }.foreach(s =>
+      fail(s"$stmt on a graft table does not support the correlated subquery ${s.sql}"))
+    rebind(e)
+  }
 
   private def fail(msg: String): Nothing =
     throw new UnsupportedOperationException(s"graft DML: $msg")
@@ -167,54 +167,51 @@ object GraftDml {
     }
   }
 
-  private[sources] def stripBackticks(s: String): String =
-    s.stripPrefix("`").stripSuffix("`").replace("``", "`")
-
-  /** Render an expression as SQL that re-resolves against a FRESH scan
-    * of the same table: qualifiers (`spark_catalog.default.t.c`) name
-    * THIS statement's relation instance and would not resolve there, so
-    * attributes render bare. A runtime-replaceable expression (`BETWEEN`)
-    * renders from its parameters, which are not tree children and keep
-    * their qualifiers, so one that reads a column renders through its
-    * `replacement` instead — with the common-subexpression `With` wrapper
-    * (no SQL form of its own) inlined.
+  /** A resolved expression as a Column that resolves again against a
+    * FRESH scan of the table: each attribute becomes its bare column name
+    * (one name part, so dots and spaces survive). A column-reading
+    * `RuntimeReplaceable` (`BETWEEN`) keeps its inputs outside the tree,
+    * so it becomes its `replacement` first, with `With` inlined. The
+    * commands keep a Column, not an Expression: `CheckAnalysis` would
+    * reject the unresolved names in a command's expressions.
     */
-  private[sources] def renderSql(e: Expression): String =
-    e.transformUp {
-      case a: AttributeReference => a.withQualifier(Nil)
+  private[sources] def rebind(e: Expression): Column =
+    GraftColumnBridge.column(e.transformUp {
       case With(child, defs) => child.transform {
         case r: CommonExpressionRef => defs.find(_.id == r.id).get.child
       }
       case r: RuntimeReplaceable if r.references.nonEmpty => r.replacement
-    }.sql
+    }.transformUp {
+      case a: AttributeReference => UnresolvedAttribute(Seq(a.name))
+    })
 }
 
 /** `DELETE FROM t WHERE cond` → merge-on-read deletion vectors: one
   * positions commit, zero data rewritten — the 100 TB default (Delta
-  * with DVs enabled). Returns the committed version.
+  * with DVs enabled). `cond` comes from [[GraftDml.rebind]]. Returns the
+  * committed version.
   */
-final case class GraftDeleteCommand(root: String, condSql: String)
+final case class GraftDeleteCommand(root: String, cond: Column)
     extends LeafRunnableCommand {
   override val output: Seq[Attribute] =
     Seq(AttributeReference("version", LongType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] =
-    Seq(Row(TxLog.deleteVectors(spark, root, expr(condSql))))
+    Seq(Row(TxLog.deleteVectors(spark, root, cond)))
 }
 
 /** `UPDATE t SET a = v, ... WHERE cond` → merge-on-read update:
   * post-image files for the matched rows, deletion vectors over their
-  * pre-images. SET values re-resolve against the snapshot (so they may
-  * reference other columns).
+  * pre-images. `cond` and the SET values come from [[GraftDml.rebind]];
+  * a value may read other columns of the old row.
   */
 final case class GraftUpdateCommand(
     root: String,
-    set: Seq[(String, String)],
-    condSql: String) extends LeafRunnableCommand {
+    set: Seq[(String, Column)],
+    cond: Column) extends LeafRunnableCommand {
   override val output: Seq[Attribute] =
     Seq(AttributeReference("version", LongType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] =
-    Seq(Row(TxLog.updateVectors(spark, root, expr(condSql),
-      set.map { case (k, v) => k -> expr(v) }.toMap)))
+    Seq(Row(TxLog.updateVectors(spark, root, cond, set.toMap)))
 }
 
 /** `MERGE INTO t USING s ON t.k = s.k WHEN MATCHED THEN UPDATE SET *
@@ -235,7 +232,7 @@ final case class GraftMergeCommand(
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val src = GraftSession.ofRows(spark, source)
+    val src = GraftPlanBridge.ofRows(spark, source)
     val updates =
       if (allowUpdate && allowInsert) src
       else {
@@ -291,7 +288,7 @@ final case class GraftInsertCommand(
             s"(${visible.fieldNames.mkString(", ")})"))
     val staticFields = static.toSeq.map { case (k, v) => (fieldOf(k), v) }
     val staticNames = staticFields.map(_._1.name).toSet
-    val src = GraftSession.ofRows(spark, query)
+    val src = GraftPlanBridge.ofRows(spark, query)
 
     val aligned: DataFrame =
       if (byName) {
@@ -358,10 +355,13 @@ final case class GraftInsertCommand(
   * (one catalog, one block manager, one cache) with a fresh
   * `SessionState` built from [[GraftDmlExtensions]] — the only way to
   * give a session handed in WITHOUT extensions (a driver's) an analyzer
-  * rule, since resolution rules are fixed at session build. The two
-  * private hops (`classic.SparkSession`'s constructor, `sharedState`)
-  * go through reflection to stay out of Spark's namespace — the
-  * established `ofRelationWithStats` stance.
+  * rule, since resolution rules are fixed at session build.
+  *
+  * `build` is the one reflective call into Spark left (other private
+  * hops go through [[org.apache.spark.sql.GraftPlanBridge]]):
+  * `classic.SparkSession`'s 6-argument constructor is Scala-`private`,
+  * out of a bridge's reach too, and the public `Builder` would build a
+  * fresh `SharedState` — a catalog the DML session would not share.
   */
 object GraftSession {
   private val cache =
@@ -387,16 +387,5 @@ object GraftSession {
       try s2.conf.set(k, v) catch { case NonFatal(_) => () }
     }
     s2
-  }
-
-  /** `Dataset.ofRows` (private[sql]) via the classic module — a
-    * DataFrame over an already-resolved logical plan.
-    */
-  private[sources] def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame = {
-    val dsMod = Class.forName("org.apache.spark.sql.classic.Dataset$")
-    val ds = dsMod.getField("MODULE$").get(null)
-    val ofRows = dsMod.getMethods.find(m =>
-      m.getName == "ofRows" && m.getParameterCount == 2).get
-    ofRows.invoke(ds, spark, plan).asInstanceOf[DataFrame]
   }
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SQLContext}
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.sources.StreamSinkProvider
 import org.apache.spark.sql.streaming.OutputMode
-import org.apache.spark.sql.types.StructType
 
 import graft.io.TxLog
 
@@ -54,6 +53,10 @@ class TxLogSinkProvider extends StreamSinkProvider {
   }
 }
 
+/** The sink behind [[TxLogSinkProvider]]: `addBatch` gets a streaming
+  * frame, which refuses batch writes, so its rows are re-wrapped as a
+  * batch frame ([[org.apache.spark.sql.GraftPlanBridge]]) and committed.
+  */
 class TxLogSink(
     root: String,
     txnPrefix: String,
@@ -61,16 +64,10 @@ class TxLogSink(
     partitionBy: Seq[String]) extends Sink {
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
-    // `data` is the engine's streaming frame, which refuses batch writes
-    // — re-wrap its physical rows as a batch DataFrame (the exact
-    // inverse of the source's bridge, same private[sql] door)
+    // the exact inverse of the source's asStreamingFrame
     val session = data.sparkSession
-    val m = session.getClass.getMethod("internalCreateDataFrame",
-      classOf[org.apache.spark.rdd.RDD[_]],
-      classOf[StructType],
-      java.lang.Boolean.TYPE)
-    val batch = m.invoke(session, data.queryExecution.toRdd, data.schema,
-      java.lang.Boolean.FALSE).asInstanceOf[DataFrame]
+    val batch = org.apache.spark.sql.GraftPlanBridge.fromRows(session,
+      data.queryExecution.toRdd, data.schema, isStreaming = false)
     TxLog.appendOnce(session, root, s"$txnPrefix#$batchId", batch,
       partitionBy = partitionBy, statsCols = statsCols)
     ()

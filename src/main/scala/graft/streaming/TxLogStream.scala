@@ -124,19 +124,13 @@ object TxLogSource {
   /** The v1 Source contract requires getBatch's DataFrame to carry
     * isStreaming = true; the only constructor for that is the session's
     * `private[sql] internalCreateDataFrame` (what FileStreamSource
-    * itself uses). One reflective call keeps us out of Spark's package
-    * namespace; the plan is the batch's own physical RDD, so the data
-    * path is identical to the batch read.
+    * itself uses), reached through
+    * [[org.apache.spark.sql.GraftPlanBridge]]. The plan is the batch's
+    * own physical RDD, so the data path is identical to the batch read.
     */
-  private[streaming] def asStreamingFrame(batch: DataFrame): DataFrame = {
-    val session = batch.sparkSession
-    val m = session.getClass.getMethod("internalCreateDataFrame",
-      classOf[org.apache.spark.rdd.RDD[_]],
-      classOf[StructType],
-      java.lang.Boolean.TYPE)
-    m.invoke(session, batch.queryExecution.toRdd, batch.schema,
-      java.lang.Boolean.TRUE).asInstanceOf[DataFrame]
-  }
+  private[streaming] def asStreamingFrame(batch: DataFrame): DataFrame =
+    org.apache.spark.sql.GraftPlanBridge.fromRows(batch.sparkSession,
+      batch.queryExecution.toRdd, batch.schema, isStreaming = true)
 }
 
 class TxLogSource(

@@ -112,6 +112,36 @@ class TxLogConstraintSpec extends AnyFunSuite {
     assert(TxLog.constraintsOf(root).keySet === Set("pos_id", "no_z"))
   }
 
+  test("a bloom-indexed commit racing an ADD CONSTRAINT re-validates its files, not their sidecars") {
+    import spark.implicits._
+    def rows(lo: Int, hi: Int, grp: String) =
+      (lo until hi).map(i => (i.toLong, s"s-$i", grp)).toDF("id", "s", "grp")
+    // flat: the publish-time re-check runs after the `.bloom` sidecars
+    // landed in the commit's txn dir; every row satisfies the constraint
+    val root = Zones.tempDir("txconsbloom")
+    TxLog.append(spark, root, rows(0, 20, "g0"), Nil, Map("s" -> 10L))
+    TxLog.testRaceHook =
+      () => { TxLog.addConstraint(spark, root, "nonneg", "id >= 0"); () }
+    TxLog.append(spark, root, rows(20, 40, "g0"), Nil, Map("s" -> 10L))
+    assert(TxLog.snapshot(spark, root).count() === 40L)
+    assert(TxLog.constraintsOf(root) === Map("nonneg" -> "id >= 0"))
+    // partitioned: the re-check reads the partition column back from the
+    // k=v dirs, so a constraint on it still catches a violating row
+    val proot = Zones.tempDir("txconsbloomp")
+    def commitP(df: org.apache.spark.sql.DataFrame): Long =
+      TxLog.commit(spark, proot, df, TxLog.Append, partitionBy = Seq("grp"),
+        bloomCols = Map("s" -> 10L))
+    commitP(rows(0, 20, "g0"))
+    TxLog.testRaceHook =
+      () => { TxLog.addConstraint(spark, proot, "known_grp", "grp IN ('g0', 'g1')"); () }
+    assertThrows[TxLog.ConstraintViolation](commitP(rows(20, 30, "g7")))
+    TxLog.testRaceHook =
+      () => { TxLog.addConstraint(spark, proot, "nonneg", "id >= 0"); () }
+    commitP(rows(30, 40, "g1"))
+    assert(TxLog.snapshot(spark, proot).count() === 30L)
+    assert(TxLog.snapshot(spark, proot).filter(col("grp") === "g7").count() === 0L)
+  }
+
   test("constraint-free tables pay zero extra manifest reads per append") {
     val root = Zones.tempDir("txconsfree")
     TxLog.append(spark, root, df(1L -> "a"))

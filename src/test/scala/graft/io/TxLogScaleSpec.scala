@@ -192,6 +192,29 @@ class TxLogScaleSpec extends AnyFunSuite {
     assert(now.size === 400 && now(150L) === "u" && now(249L) === "u" && now(250L) === "row-250")
   }
 
+  test("a copy-on-write delete starts at most 2 Spark jobs") {
+    val root = fourFiles()
+    val (_, jobs) = TestSpark.jobsStartedBy(
+      TxLog.delete(spark, root, col("id") >= 150L && col("id") <= 249L, Seq("id")))
+    // the change rows' write and the survivors' commit, no count pass
+    assert(jobs <= 2, s"one copy-on-write delete started $jobs Spark jobs")
+    assert(TxLog.snapshot(spark, root).count() === 300L)
+    assert(TxLog.changes(spark, root, 4L, 5L, withChangeType = true)
+      .filter(col("_change_type") === "delete").count() === 100L)
+  }
+
+  test("a copy-on-write update starts at most 2 Spark jobs") {
+    val root = fourFiles()
+    val (_, jobs) = TestSpark.jobsStartedBy(
+      TxLog.update(spark, root, col("id") >= 150L && col("id") <= 249L,
+        Map("payload" -> lit("u")), Seq("id")))
+    // the pre/post images' write and the rewritten files' commit
+    assert(jobs <= 2, s"one copy-on-write update started $jobs Spark jobs")
+    val now = TxLog.snapshot(spark, root).collect()
+      .map(x => x.getLong(0) -> x.getString(1)).toMap
+    assert(now.size === 400 && now(150L) === "u" && now(249L) === "u" && now(250L) === "row-250")
+  }
+
   test("optimize of a table with deletion vectors starts at most 4 Spark jobs") {
     val root = fourFiles()
     TxLog.deleteVectors(spark, root, col("id") % 10 === 3)

@@ -490,4 +490,15 @@ class TxLogSpec extends AnyFunSuite {
     assert(byType === Map("insert" -> 10L, "delete" -> 1L,
       "update_preimage" -> 1L, "update_postimage" -> 1L))
   }
+
+  test("a copy-on-write delete and update on a table with a column named a.b") {
+    import spark.implicits._
+    val root = freshTable()
+    TxLog.append(spark, root, (0 until 4).map(i => (i.toLong, s"v-$i")).toDF("id", "a.b"))
+    TxLog.delete(spark, root, col("id") === 1L)
+    TxLog.update(spark, root, col("id") === 2L, Map("a.b" -> lit("U")))
+    val got = TxLog.snapshot(spark, root).collect()
+      .map(x => x.getLong(0) -> x.getString(1)).toMap
+    assert(got === Map(0L -> "v-0", 2L -> "U", 3L -> "v-3"))
+  }
 }

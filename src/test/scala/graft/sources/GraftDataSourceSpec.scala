@@ -189,7 +189,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     } finally s2.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
-  test("SQL DELETE / UPDATE with a subquery is refused by name; the table is unchanged") {
+  test("SQL DELETE / UPDATE with uncorrelated subqueries apply; a correlated one is refused by name") {
     val root = Zones.tempDir("dssubq")
     TxLog.commit(spark, root, batch(0, 10).coalesce(1), TxLog.Append,
       statsCols = Seq("id"))
@@ -197,17 +197,59 @@ class GraftDataSourceSpec extends AnyFunSuite {
     val tbl = s"graft_subq_${java.util.UUID.randomUUID().toString.take(8).replace("-", "")}"
     s2.sql(s"CREATE TABLE $tbl USING graft LOCATION '$root'")
     try {
-      val before = TxLog.snapshot(spark, root).collect().toSet
       Seq(
         s"DELETE FROM $tbl WHERE id IN (SELECT 3)",
-        s"UPDATE $tbl SET payload = 'u' WHERE id IN (SELECT 3)",
-        s"UPDATE $tbl SET payload = (SELECT 'u') WHERE id = 3"
+        s"DELETE FROM $tbl WHERE id IN (SELECT 4 UNION ALL SELECT 5)",
+        s"DELETE FROM $tbl WHERE EXISTS (SELECT 1) AND id = 6",
+        s"DELETE FROM $tbl WHERE NOT EXISTS (SELECT 1)",
+        s"UPDATE $tbl SET payload = (SELECT 'u') WHERE id = 7",
+        s"UPDATE $tbl SET payload = 'w' WHERE id IN (SELECT 8)"
+      ).foreach(stmt => s2.sql(stmt))
+      val rows = TxLog.snapshot(spark, root).collect()
+        .map(r => r.getAs[Long]("id") -> r.getAs[String]("payload")).toMap
+      assert(rows === Map(0L -> "v-0", 1L -> "v-1", 2L -> "v-2", 7L -> "u",
+        8L -> "w", 9L -> "v-9"))
+      val head = TxLog.headVersion(root)
+      val feed = TxLog.changes(spark, root, 1L, head, withChangeType = true)
+        .groupBy("_change_type").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(feed === Map("delete" -> 4L, "update_preimage" -> 2L,
+        "update_postimage" -> 2L))
+
+      // a correlated subquery's outer reference sits inside its plan,
+      // where re-binding cannot reach: refused, the table unchanged
+      val before = TxLog.snapshot(spark, root).collect().toSet
+      Seq(
+        s"DELETE FROM $tbl WHERE EXISTS (SELECT 1 FROM $tbl u WHERE u.id = $tbl.id + 1)",
+        s"UPDATE $tbl SET payload = (SELECT max(u.payload) FROM $tbl u " +
+          s"WHERE u.id = $tbl.id - 1) WHERE id = 2"
       ).foreach { stmt =>
         val e = intercept[UnsupportedOperationException](s2.sql(stmt))
-        assert(e.getMessage.contains("subquer"), s"$stmt: ${e.getMessage}")
+        assert(e.getMessage.contains("correlated subquery"), s"$stmt: ${e.getMessage}")
       }
-      assert(TxLog.headVersion(root) === 1L)
+      assert(TxLog.headVersion(root) === head)
       assert(TxLog.snapshot(spark, root).collect().toSet === before)
+    } finally s2.sql(s"DROP TABLE IF EXISTS $tbl")
+  }
+
+  test("a filter inside a DELETE's subquery never prunes the target's files") {
+    import spark.implicits._
+    val root = Zones.tempDir("dssubqprune")
+    TxLog.commit(spark, root,
+      (1 to 10).map(i => (i.toLong, s"v-$i")).toDF("my id", "payload").coalesce(1),
+      TxLog.Append, statsCols = Seq("my id"))
+    // the subquery's relation has a `my id` column too, and its filter
+    // `my id` > 100 excludes every zone of the target's one file
+    val srcDir = Zones.tempDir("dssubqsrc")
+    Seq((200L, 1L)).toDF("my id", "k2").write.parquet(srcDir)
+    val s2 = GraftSession.withDml(spark)
+    s2.read.parquet(srcDir).createOrReplaceTempView("subq_src")
+    val tbl = s"graft_subqp_${java.util.UUID.randomUUID().toString.take(8).replace("-", "")}"
+    s2.sql(s"CREATE TABLE $tbl USING graft LOCATION '$root'")
+    try {
+      s2.sql(s"DELETE FROM $tbl WHERE `my id` IN (SELECT k2 FROM subq_src WHERE `my id` > 100)")
+      val ids = TxLog.snapshot(spark, root).select("my id").as[Long].collect().toSet
+      assert(ids === (2L to 10L).toSet)
     } finally s2.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
